@@ -45,7 +45,10 @@ class Engine:
         from cod_stats_spark.session import prep_session
 
         # date_key derivation (from_unixtime) and the oracle dialect both
-        # assume UTC + non-ANSI; normalize regardless of who built the session
+        # assume UTC + non-ANSI; normalize regardless of who built the
+        # session. No ship_package: the engine's plans are built-in
+        # Column expressions and its one worker-side function
+        # (_executor_write) is pickled by value.
         prep_session(spark)
         self.spark = spark
         self.bronze = bronze
@@ -199,7 +202,7 @@ class Engine:
         Top-k documents (boards, recents, dims) are tiny by
         construction and collected to the driver. Per-player documents
         are written DISTRIBUTED: each (player, season) group is folded
-        to one row executor-side and written from foreachPartition, so
+        to one row executor-side and written from mapPartitions, so
         the driver never holds the full timeseries/session row set
         (``out_dir`` must be driver+executor-visible storage — true in
         local mode and for shared filesystems/object stores).
@@ -224,14 +227,9 @@ class Engine:
         # files are written in the same fixed order as before.
         docs: list[tuple[str, object]] = [
             ("leaderboard_bygame.json",
-             lambda: rep.leaderboard_bygame_doc(self.leaderboards())),
+             lambda: rep.leaderboard_bygame_doc(lb.by_game_boards(self.stats_wz(), self.core()))),
             ("leaderboard_lifetime.json",
-             lambda: rep.leaderboard_lifetime_doc(
-                 self.gulag_streaks(True),
-                 self.gulag_streaks(False),
-                 self.most_wins(),
-                 self.most_last_places(),
-             )),
+             lambda: rep.leaderboard_lifetime_doc(lb.lifetime_boards(self.stats_wz(), self.core()))),
             ("team_leaderboards.json",
              lambda: rep.team_leaderboards_doc(self.team_breakdowns())),
             ("recent_matches.json",
@@ -259,25 +257,6 @@ class Engine:
         "game": ["date_key", "mode", "kills", "game_id"],
     }
 
-    def _player_season_combos(self) -> tuple[list[str], list[str]]:
-        """Players × seasons that get a per-player document.
-
-        Season ids come straight from the static seasons dim — the
-        reference iterates ALL of vw_seasons when emitting per-player
-        docs (generate_lookup_data.sh:892-932), writing empty documents
-        for seasons without data; deriving the list from the data (a
-        full seasonal rollup, as done through round 2) both cost a
-        wasted aggregation pass per write_reports and skipped the
-        empty-season docs the reference serves.
-        """
-        from cod_stats_spark.engine.dims import SEASONS
-
-        players = sorted(
-            r["player_id"] for r in self.players.select("player_id").distinct().collect()
-        )
-        season_ids = sorted(s[0] for s in SEASONS)
-        return players, season_ids
-
     @staticmethod
     def _grouped_rows(df: DataFrame, group_cols: list[str], sort_cols: list[str]) -> DataFrame:
         """One row per group: (group_cols..., rows) with ``rows`` the
@@ -295,8 +274,9 @@ class Engine:
         )
 
     @staticmethod
-    def _foreach_write(df: DataFrame, out_dir: str, rel_template: str, payload_fn) -> None:
-        """Executor-side writer: each row becomes one JSON file.
+    def _executor_write(df: DataFrame, out_dir: str, rel_template: str, payload_fn) -> list[str]:
+        """Executor-side writer: each row becomes one JSON file; returns
+        the written paths, so the one action both writes and lists.
         ``payload_fn`` must be self-contained (pickled by value) —
         module references would require the package on worker paths."""
 
@@ -310,22 +290,21 @@ class Engine:
                 _os.makedirs(_os.path.dirname(path), exist_ok=True)
                 with open(path, "w") as f:
                     _json.dump(payload_fn(d.get("rows") or []), f, separators=(",", ":"))
+                yield path
 
-        df.foreachPartition(write_part)
+        return df.rdd.mapPartitions(write_part).collect()
 
     def _write_player_docs(self, out_dir: str) -> list[str]:
-        from pyspark.sql import functions as F
-
+        from cod_stats_spark.engine.dims import SEASONS
         from cod_stats_spark.engine.timeseries import TS_METRICS
 
-        players, season_ids = self._player_season_combos()
-        combos = self.spark.createDataFrame(
-            [(p, s) for p in players for s in season_ids],
-            "player_id string, season_id string",
-        )
-        players_df = self.spark.createDataFrame(
-            [(p,) for p in players], "player_id string"
-        )
+        # Every player × every season gets a document, empty ones too: the
+        # reference iterates ALL of vw_seasons (generate_lookup_data.sh:
+        # 892-932). Executors write the groups that have rows; the driver
+        # writes [] for the rest of the key set, players × SEASONS.
+        player_ids = sorted({r[0] for r in self.players.select("player_id").collect()})
+        players = [{"player_id": p} for p in player_ids]
+        combos = [{"player_id": p, "season_id": s[0]} for p in player_ids for s in SEASONS]
         metrics = [tuple(m) for m in TS_METRICS]  # plain data → by-value pickle
 
         def ts_payload(frames):
@@ -370,7 +349,7 @@ class Engine:
                 self.player_season_stats(),
                 ["player_id"],
                 ["sort_order"],
-                players_df,
+                players,
                 "players/{player_id}_player_stats.json",
                 identity,
             ),
@@ -378,68 +357,20 @@ class Engine:
                 self.session_stats(),
                 ["player_id"],
                 ["session_number"],
-                players_df,
+                players,
                 "players/sessions_{player_id}.json",
                 identity,
             ),
         ]
         written = []
-        for df, group_cols, sort_cols, frame, template, payload_fn in jobs:
+        for df, group_cols, sort_cols, keys, template, payload_fn in jobs:
             grouped = self._grouped_rows(df, group_cols, sort_cols)
-            full = frame.join(grouped, group_cols, "left")  # empty combos → []
-            self._foreach_write(full, out_dir, template, payload_fn)
-            written += [
-                os.path.join(out_dir, template.format(**{c: row[c] for c in group_cols}))
-                for row in frame.collect()
-            ]
-        return written
-
-    def _write_player_docs_driver_side(self, out_dir: str) -> list[str]:
-        """Legacy driver-side fan-out (collect everything, loop in
-        Python). Kept ONLY as the behavioral reference for the
-        distributed-vs-driver parity test; O(all rows) driver memory
-        makes it unsuitable beyond hobby scale."""
-        written = []
-
-        def emit(rel: str, payload) -> None:
-            path = os.path.join(out_dir, rel)
-            rep.write_json(path, payload)
-            written.append(path)
-
-        players, season_ids = self._player_season_combos()
-        day_rows = [r.asDict() for r in self.seasonal_daily_timeseries().collect()]
-        game_rows = [r.asDict() for r in self.seasonal_by_game_timeseries().collect()]
-        gkey = self.PLAYER_DOC_SORTS["game"]
-        for p in players:
-            for sid in season_ids:
-                prows = sorted(
-                    (r for r in day_rows if r["player_id"] == p and r["season_id"] == sid),
-                    key=lambda r: r["date_key"],
-                )
-                emit(f"players/{p}_{sid}_time_wz.json", rep.player_timeseries_doc(prows, (3, 7)))
-                grows = sorted(
-                    (r for r in game_rows if r["player_id"] == p and r["season_id"] == sid),
-                    key=lambda r: tuple(r[c] for c in gkey),
-                )
-                emit(f"players/{p}_{sid}_game_wz.json", rep.player_timeseries_doc(grows, (10, 25)))
-
-        season_stats = [r.asDict() for r in self.player_season_stats().collect()]
-        for p in players:
-            rows_p = sorted(
-                (r for r in season_stats if r["player_id"] == p),
-                key=lambda r: r["sort_order"],
-            )
-            emit(f"players/{p}_player_stats.json", rows_p)
-
-        per_player_sessions = [r.asDict(recursive=True) for r in self.session_stats().collect()]
-        for p in players:
-            emit(
-                f"players/sessions_{p}.json",
-                sorted(
-                    (r for r in per_player_sessions if r["player_id"] == p),
-                    key=lambda r: r["session_number"],
-                ),
-            )
+            nonempty = set(self._executor_write(grouped, out_dir, template, payload_fn))
+            for key in keys:
+                path = os.path.join(out_dir, template.format(**key))
+                if path not in nonempty:
+                    rep.write_json(path, [])
+                written.append(path)
         return written
 
 

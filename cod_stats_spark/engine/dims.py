@@ -2,8 +2,12 @@
 
 Data values mirror the reference's dimension views (game modes:
 parser/parse_matches.sh:100-156; seasons: :158-184; settings:
-:186-198); the representation (python tuples → createDataFrame) and
-everything downstream is new.
+:186-198); the representation (python tuples → an inline VALUES table)
+and everything downstream is new.
+
+The tables are JVM-local relations (``LocalRelation``), not
+``createDataFrame(list)``: that one is a Python RDD, so every plan that
+joins a dimension ran Python worker tasks just to scan ~40 literal rows.
 """
 
 from __future__ import annotations
@@ -94,9 +98,26 @@ SESSION_DELTA_SECONDS = 2 * 60 * 60  # 2h inactivity gap splits sessions
 SESSION_OPEN_END_EPOCH = 9_999_999_999
 
 
+def _sql_literal(v) -> str:
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _inline_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` typed by the DDL ``schema`` as a VALUES table: the planner
+    folds it into one LocalRelation, scanned with no Spark job."""
+    cols = [c.split() for c in schema.split(",")]
+    select = ", ".join(f"CAST(col{i} AS {t}) AS `{n}`" for i, (n, t) in enumerate(cols, 1))
+    values = ", ".join("(" + ", ".join(map(_sql_literal, r)) + ")" for r in rows)
+    return spark.sql(f"SELECT {select} FROM VALUES {values}")
+
+
 def game_modes_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(GAME_MODES, GAME_MODES_SCHEMA)
+    return _inline_table(spark, GAME_MODES, GAME_MODES_SCHEMA)
 
 
 def seasons_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SEASONS, SEASONS_SCHEMA)
+    return _inline_table(spark, SEASONS, SEASONS_SCHEMA)

@@ -7,12 +7,19 @@ to agree with the filename — same trust model as the reference parser
 (parse_matches.sh:580-596).
 
 Scale: spark.read.json with an explicit schema — no sampling pass, no
-schema inference; each file is one task-splittable JSON document.
+schema inference; each file is one task-splittable JSON document. A
+leaf-only local glob (``<dir>/*.json``) is read as ``<dir>`` with a
+``pathGlobFilter``: a glob that expands to more than 32 files makes
+Spark list them in a parallel job with one task per file, while a single
+directory root is listed on the driver with no job at all
+(:func:`scan_root`).
 Incremental loads are a left-anti join against the already-ingested
 key ledger (SURVEY.md P6/S3), not a filesystem diff.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,10 +28,41 @@ from cod_stats_spark.engine.schemas import MATCH_SCHEMA, PLAYERS_CONFIG_SCHEMA
 
 FILENAME_RE = r".*/match_([^_]+)_([^_/]+)\.json$"
 
+_GLOB_CHARS = frozenset("*?[]{}\\")
+
+
+def scan_root(path: str) -> tuple[str, dict[str, str]]:
+    """(path, reader options) that read the same files as ``path``.
+
+    A glob in the last component only, over a local directory with no
+    subdirectories, becomes that directory plus ``pathGlobFilter``: the
+    same file set (a directory read would also pick up files in
+    subdirectories, hence that condition), listed without Spark's
+    parallel listing job. Everything else — plain paths, globs in a
+    parent component, URIs such as ``s3a://`` — passes through as is.
+    """
+    parent, leaf = os.path.split(path)
+    if (
+        "://" in path
+        or not _GLOB_CHARS.intersection(leaf)
+        or _GLOB_CHARS.intersection(parent)
+        or not os.path.isdir(parent)
+    ):
+        return path, {}
+    with os.scandir(parent) as entries:
+        if any(e.is_dir() for e in entries):
+            return path, {}
+    return parent, {"pathGlobFilter": leaf}
+
+
+def _read_json(spark: SparkSession, path: str, schema, **options) -> DataFrame:
+    root, scan = scan_root(path)
+    return spark.read.options(**scan, **options).json(root, schema=schema, multiLine=True)
+
 
 def read_matches(spark: SparkSession, path: str) -> DataFrame:
     """Raw (bronze) match rows: one row per file, keys from filename."""
-    raw = spark.read.json(path, schema=MATCH_SCHEMA, multiLine=True)
+    raw = _read_json(spark, path, MATCH_SCHEMA)
     fname = F.input_file_name()
     return raw.select(
         F.regexp_extract(fname, FILENAME_RE, 1).alias("game_id"),
@@ -100,10 +138,8 @@ def corrupt_matches(spark: SparkSession, path: str) -> DataFrame:
     schema = StructType(
         [*MATCH_SCHEMA.fields, StructField("_corrupt_record", StringType())]
     )
-    raw = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path, schema=schema, multiLine=True)
+    raw = _read_json(
+        spark, path, schema, mode="PERMISSIVE", columnNameOfCorruptRecord="_corrupt_record"
     )
     fname = F.input_file_name()
     # NB: Spark refuses scans whose referenced source columns are ONLY

@@ -18,6 +18,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 
 from cod_stats_spark.engine.dims import SEASONS
+from cod_stats_spark.engine.leaderboards import BY_GAME_COLUMNS, BY_GAME_METRICS, LIFETIME_BOARDS
 
 
 def _rows(df: DataFrame) -> list[dict]:
@@ -30,23 +31,32 @@ def write_json(path: str, payload) -> None:
         json.dump(payload, f, separators=(",", ":"))
 
 
-def leaderboard_bygame_doc(boards: dict[str, DataFrame]) -> dict:
-    """{board_key: [ {date_key, game_mode_sub, game_id, player_id, value} ]}"""
-    return {name: _rows(df) for name, df in boards.items()}
+def _boards(ranked: DataFrame, columns: dict[str, list[str]]) -> dict:
+    """One collect of a tagged, ranked board union → {board: [rows in
+    rank order]}, each row restricted to its board's columns; every board
+    key is present, empty boards as []."""
+    doc: dict[str, list] = {board: [] for board in columns}
+    for r in sorted(_rows(ranked), key=lambda r: (r["board"], r["rank"])):
+        doc[r["board"]].append({c: r[c] for c in columns[r["board"]]})
+    return doc
 
 
-def leaderboard_lifetime_doc(
-    gulag_win_streaks: DataFrame,
-    gulag_loss_streaks: DataFrame,
-    wins: DataFrame,
-    last_places: DataFrame,
-) -> dict:
-    return {
-        "consecutive_gulag_kills": _rows(gulag_win_streaks),
-        "consecutive_gulag_deaths": _rows(gulag_loss_streaks),
-        "most_wins": _rows(wins),
-        "most_lastplaces": _rows(last_places),
-    }
+def leaderboard_bygame_doc(ranked: DataFrame) -> dict:
+    """{board_key: [ {date_key, game_mode_sub, game_id, player_id, value} ]}
+    from ``leaderboards.by_game_boards``; ``value`` is whichever of the
+    display string, long or double field the board populates."""
+    doc = _boards(ranked, {b: [*BY_GAME_COLUMNS, "sv", "lv", "dv"] for b in BY_GAME_METRICS})
+    for rows in doc.values():
+        for r in rows:
+            sv, lv, dv = r.pop("sv"), r.pop("lv"), r.pop("dv")
+            r["value"] = sv if sv is not None else lv if lv is not None else dv
+    return doc
+
+
+def leaderboard_lifetime_doc(ranked: DataFrame) -> dict:
+    """{consecutive_gulag_kills, consecutive_gulag_deaths, most_wins,
+    most_lastplaces} from ``leaderboards.lifetime_boards``."""
+    return _boards(ranked, LIFETIME_BOARDS)
 
 
 def team_leaderboards_doc(breakdowns: DataFrame) -> dict:
@@ -78,26 +88,3 @@ def seasons_doc() -> list[dict]:
 def meta_doc(now: datetime | None = None) -> dict:
     ts = (now or datetime.now(timezone.utc)).strftime("%Y-%m-%dT%H:%M:%SZ")
     return {"updatedAt": ts}
-
-
-def player_timeseries_doc(ts_rows: list[dict], frames: tuple[int, int]) -> list[dict]:
-    """Nest flat frame columns back into the reference's document shape:
-    {date, stats: {raw: {...}, smoothed_k: {...}, cumalative: {...}}}
-    ('cumalative' typo preserved for client compatibility)."""
-    k1, k2 = frames
-    from cod_stats_spark.engine.timeseries import TS_METRICS
-
-    docs = []
-    for r in ts_rows:
-        raw = {m: r.get(m) for m, _ in TS_METRICS}
-        doc = {
-            "date": r.get("date_key"),
-            "stats": {
-                "raw": raw,
-                f"smoothed_{k1}": {m: r.get(f"{m}_{a}_s{k1}") for m, a in TS_METRICS},
-                f"smoothed_{k2}": {m: r.get(f"{m}_{a}_s{k2}") for m, a in TS_METRICS},
-                "cumalative": {m: r.get(f"{m}_{a}_cume") for m, a in TS_METRICS},
-            },
-        }
-        docs.append(doc)
-    return docs

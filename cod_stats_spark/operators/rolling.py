@@ -40,6 +40,15 @@ def _norm_metrics(metrics) -> list[tuple[str, str]]:
     return list(metrics)
 
 
+def _frame_columns(metrics, w, sfx: str) -> dict[str, Column]:
+    """``{metric}_{agg}_{sfx}`` → agg over ``w``, for one ``withColumns``
+    projection (a ``withColumn`` per metric re-analyzes the plan each time)."""
+    return {
+        f"{metric}_{agg}_{sfx}": _AGGS[agg](F.col(metric)).over(w)
+        for metric, agg in _norm_metrics(metrics)
+    }
+
+
 def rolling_frames(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -55,11 +64,7 @@ def rolling_frames(
     """
     sfx = suffix if suffix is not None else f"roll{preceding + 1}"
     w = _window(key_cols, order_cols).rowsBetween(-preceding, Window.currentRow)
-    out = df
-    for metric, agg in _norm_metrics(metrics):
-        col: Column = _AGGS[agg](F.col(metric)).over(w)
-        out = out.withColumn(f"{metric}_{agg}_{sfx}", col)
-    return out
+    return df.withColumns(_frame_columns(metrics, w, sfx))
 
 
 def rolling_time_frames(
@@ -94,10 +99,7 @@ def rolling_time_frames(
         .orderBy(F.col("_ts_ord").asc())
         .rangeBetween(-window_seconds * per_sec, Window.currentRow)
     )
-    for metric, agg in _norm_metrics(metrics):
-        col: Column = _AGGS[agg](F.col(metric)).over(w)
-        out = out.withColumn(f"{metric}_{agg}_{sfx}", col)
-    return out.drop("_ts_ord")
+    return out.withColumns(_frame_columns(metrics, w, sfx)).drop("_ts_ord")
 
 
 def cumulative_frames(
@@ -109,8 +111,4 @@ def cumulative_frames(
 ) -> DataFrame:
     """Add running-total columns ``{metric}_{agg}_cume`` (unbounded preceding .. current)."""
     w = _window(key_cols, order_cols).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    out = df
-    for metric, agg in _norm_metrics(metrics):
-        col: Column = _AGGS[agg](F.col(metric)).over(w)
-        out = out.withColumn(f"{metric}_{agg}_{suffix}", col)
-    return out
+    return df.withColumns(_frame_columns(metrics, w, suffix))

@@ -65,7 +65,7 @@ from cod_stats_spark.operators.timeseries_agg import (
     twa_oracle_sql,
 )
 from cod_stats_spark.operators.topk import top_k, top_k_per_group
-from cod_stats_spark.session import prep_session
+from cod_stats_spark.session import prep_session, ship_package
 from cod_stats_spark.tables import load_tables
 
 # the event-stream funnel the stat_aggregates and stateful_sessions
@@ -109,6 +109,7 @@ def query(name: str, covers: str, oracle: str | None = None, cache_plan: bool = 
     def deco(fn):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             prep_session(spark)
+            ship_package(spark)
             if not cache_plan:
                 return fn(spark, sf_dir)
             key = (id(spark), sf_dir, name)
@@ -7420,6 +7421,7 @@ def _bench_only(name: str):
     def deco(fn):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             prep_session(spark)
+            ship_package(spark)
             return fn(spark, sf_dir)
 
         wrapped.__name__ = f"bench_{name}"

@@ -6,6 +6,8 @@ Two entry points:
   (local[N], shuffle partitions ~= cores, AQE on).
 - ``prep_session(spark)`` normalizes a session we did NOT build (the
   driver passes its own) — runtime-settable confs only.
+- ``ship_package(spark)`` puts the package on the Python workers' path,
+  for the operators whose worker-side functions import it.
 
 Scale posture: every conf set here is either runtime-settable or a
 local-mode default that a real cluster would override via spark-submit.
@@ -15,6 +17,7 @@ The engine itself never assumes local mode.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -75,6 +78,45 @@ def get_spark(app_name: str = "cod_stats_spark", cpus: int | None = None) -> Spa
     return spark
 
 
+_SHIP_LOCK = threading.Lock()
+_SHIPPED: set[str] = set()  # application ids that already have the archive
+
+
+def _package_archive() -> str:
+    """The package's sources as one zip in the temp dir, named by their
+    content hash: entries sorted, fixed timestamps, written to a private
+    name and renamed into place. Every build of the same sources is the
+    same bytes at the same path, so a rebuild can never swap a file a
+    running application already fetched."""
+    import hashlib
+    import tempfile
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
+    entries = []
+    for d, dirs, names in os.walk(pkg_dir):
+        dirs[:] = [n for n in dirs if n != "__pycache__"]
+        for n in names:
+            if n.endswith(".py"):
+                full = os.path.join(d, n)
+                with open(full, "rb") as f:
+                    entries.append((os.path.relpath(full, root), f.read()))
+    entries.sort()
+    h = hashlib.sha256()
+    for rel, data in entries:
+        h.update(rel.encode() + b"\0" + data)
+    path = os.path.join(tempfile.gettempdir(), f"cod_stats_spark_pkg-{h.hexdigest()[:16]}.zip")
+    if not os.path.exists(path):
+        tmp = f"{path}.{os.getpid()}.{threading.get_ident()}"
+        with zipfile.ZipFile(tmp, "w") as z:
+            for rel, data in entries:
+                info = zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0))
+                z.writestr(info, data, zipfile.ZIP_DEFLATED)
+        os.replace(tmp, path)
+    return path
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make `cod_stats_spark` importable on every Python worker.
 
@@ -82,31 +124,20 @@ def ship_package(spark: SparkSession) -> None:
     stateful operators) are pickled BY REFERENCE — workers must import
     the module, and the driver's sys.path does not propagate to them.
     Shipping a zip via addPyFile fixes this regardless of the driver's
-    cwd/PYTHONPATH. Idempotent per session.
+    cwd/PYTHONPATH. Only the operators that need worker imports call
+    it (the bench-query wrappers); the Engine does not. Once per
+    application, under a lock: concurrent first calls ship one archive.
     """
-    marker = "spark.cod_stats_spark.pkg_shipped"
-    try:
-        if spark.conf.get(marker, "no") == "yes":
+    sc = spark.sparkContext
+    with _SHIP_LOCK:
+        if sc.applicationId in _SHIPPED:
             return
-    except Exception:
-        pass
-    import shutil
-    import tempfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    try:
-        archive = shutil.make_archive(
-            os.path.join(tempfile.gettempdir(), "cod_stats_spark_pkg"),
-            "zip",
-            root_dir=root,
-            base_dir="cod_stats_spark",
-        )
-        spark.sparkContext.addPyFile(archive)
-        spark.conf.set(marker, "yes")
-    except Exception:
-        # non-fatal: driver-side-only plans still work
-        pass
+        try:
+            sc.addPyFile(_package_archive())
+            _SHIPPED.add(sc.applicationId)
+        except Exception:
+            # non-fatal: driver-side-only plans still work
+            pass
 
 
 def prep_session(spark: SparkSession) -> SparkSession:
@@ -114,9 +145,9 @@ def prep_session(spark: SparkSession) -> SparkSession:
 
     The oracle comparison (DuckDB) assumes UTC timestamps and non-ANSI
     SQL semantics (x/0 -> NULL, silent casts) — the dialect the
-    reference engine uses (SURVEY.md §7.4.2).
+    reference engine uses (SURVEY.md §7.4.2). Confs only: shipping the
+    package to workers is :func:`ship_package`, for callers that need it.
     """
-    ship_package(spark)
     conf = spark.conf
     conf.set("spark.sql.session.timeZone", "UTC")
     conf.set("spark.sql.ansi.enabled", "false")

@@ -240,20 +240,26 @@ class TestReports:
         values = {r["value"] for r in doc["longestdistance"]}
         assert values == {"2 km"}
 
-    def test_distributed_writer_matches_driver_side_bytes(self, engine, tmp_path):
-        """The executor-side per-player fan-out must emit byte-identical
-        files to the legacy collect-and-loop path it replaced."""
-        dist = tmp_path / "dist"
-        legacy = tmp_path / "legacy"
-        w_dist = engine._write_player_docs(str(dist))
-        w_leg = engine._write_player_docs_driver_side(str(legacy))
-        rel_dist = {p.split(str(dist) + "/")[1] for p in w_dist}
-        rel_leg = {p.split(str(legacy) + "/")[1] for p in w_leg}
-        assert rel_dist == rel_leg and len(rel_dist) > 10
-        for rel in sorted(rel_leg):
-            a = (dist / rel).read_bytes()
-            b = (legacy / rel).read_bytes()
-            assert a == b, f"byte drift in {rel}"
+
+class TestDims:
+    def test_dims_are_jvm_local_relations(self, spark):
+        """The static dims plan as LocalTableScan: no Python RDD scan, so
+        joining a dim runs no Python worker task."""
+        from cod_stats_spark.engine.dims import (
+            GAME_MODES, GAME_MODES_SCHEMA, SEASONS, SEASONS_SCHEMA, game_modes_df, seasons_df,
+        )
+
+        for df, rows, ddl in (
+            (game_modes_df(spark), GAME_MODES, GAME_MODES_SCHEMA),
+            (seasons_df(spark), SEASONS, SEASONS_SCHEMA),
+        ):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan
+            assert "ExistingRDD" not in plan and "Python" not in plan
+            assert [tuple(r) for r in df.collect()] == rows
+            assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+                tuple(c.split()) for c in ddl.split(",")
+            ]
 
 
 class TestReportGoldens:
@@ -285,6 +291,59 @@ class TestReportGoldens:
             got = (out / rel).read_bytes()
             want = open(os.path.join(golden_root, rel), "rb").read()
             assert got == want, f"byte drift vs golden in {rel}"
+
+    def test_goldens_without_shipped_package(self, fixture_dirs, tmp_path):
+        """write_reports needs no package on the Python workers: in a
+        fresh application whose workers cannot import cod_stats_spark,
+        with ship_package made to fail, the documents still match the
+        goldens byte for byte."""
+        import os
+        import subprocess
+        import sys
+
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        golden_root = os.path.join(repo, "tests", "goldens", "reports")
+        mdir, pj = fixture_dirs
+        out = tmp_path / "reports"
+        script = f"""
+import importlib.util, sys
+from datetime import datetime, timezone
+sys.path.insert(0, {repo!r})
+from cod_stats_spark import session
+
+def refuse(spark):
+    raise AssertionError("ship_package called")
+
+session.ship_package = refuse
+spark = session.get_spark("no-ship", cpus=2)
+probe = spark.sparkContext.parallelize([0], 1)
+assert probe.map(lambda _: importlib.util.find_spec("cod_stats_spark")).collect() == [None]
+from cod_stats_spark.engine import Engine
+eng = Engine.from_paths(spark, {mdir + "/*.json"!r}, {pj!r})
+eng.write_reports({str(out)!r}, now=datetime(2026, 1, 1, tzinfo=timezone.utc))
+spark.stop()
+"""
+        # workers inherit PYTHONPATH: keep the repo off it (cwd is tmp_path)
+        pythonpath = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+        env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=os.pathsep.join(
+            p for p in pythonpath if p and os.path.abspath(p) != repo
+        ))
+        proc = subprocess.run(
+            [sys.executable, "-c", script], cwd=tmp_path, env=env,
+            capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        golden = {
+            os.path.relpath(os.path.join(d, f), golden_root): os.path.join(d, f)
+            for d, _, fs in os.walk(golden_root)
+            for f in fs
+        }
+        emitted = {
+            os.path.relpath(os.path.join(d, f), out) for d, _, fs in os.walk(out) for f in fs
+        }
+        assert emitted == set(golden)
+        for rel, path in golden.items():
+            assert (out / rel).read_bytes() == open(path, "rb").read(), rel
 
 
 class TestSqlApi:

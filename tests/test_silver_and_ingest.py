@@ -55,6 +55,64 @@ class TestIncrementalIngest:
         assert len(keys) == len(set(keys))
 
 
+class TestListingRewrite:
+    """A leaf-only local glob is read as its directory plus
+    pathGlobFilter — no parallel listing job — over the same files."""
+
+    @staticmethod
+    def _files(df):
+        return {r[0] for r in df.select(F.input_file_name()).collect()}
+
+    def test_same_files_as_glob(self, spark, fixture_dirs):
+        from cod_stats_spark.engine import ingest
+        from cod_stats_spark.engine.schemas import MATCH_SCHEMA
+
+        mdir, _ = fixture_dirs
+        glob = f"{mdir}/*.json"
+        assert ingest.scan_root(glob) == (mdir, {"pathGlobFilter": "*.json"})
+        rewritten = self._files(ingest._read_json(spark, glob, MATCH_SCHEMA))
+        as_glob = self._files(spark.read.json(glob, schema=MATCH_SCHEMA, multiLine=True))
+        assert rewritten == as_glob and len(rewritten) > 20
+        keys = {
+            (r["game_id"], r["player_uno_id"])
+            for r in ingest.read_matches(spark, glob).collect()
+        }
+        assert len(keys) == len(as_glob)
+
+    def test_subdirectory_file_not_picked_up(self, spark, fixture_dirs, tmp_path):
+        import shutil
+
+        from cod_stats_spark.engine import ingest
+
+        mdir, _ = fixture_dirs
+        work = tmp_path / "m"
+        shutil.copytree(mdir, work)
+        flat = ingest.read_matches(spark, f"{work}/*.json").select("game_id").collect()
+        sub = work / "older"
+        sub.mkdir()
+        (sub / "match_gsub_uno-a1.json").write_text((work / "match_g001_uno-a1.json").read_text())
+        ids = [r["game_id"] for r in ingest.read_matches(spark, f"{work}/*.json").collect()]
+        assert "gsub" not in ids
+        assert sorted(ids) == sorted(r["game_id"] for r in flat)
+
+    def test_other_paths_pass_through(self, tmp_path):
+        from cod_stats_spark.engine.ingest import scan_root
+
+        (tmp_path / "a").mkdir()
+        (tmp_path / "b").mkdir()
+        (tmp_path / "b" / "nested").mkdir()
+        for path in [
+            "s3a://bucket/matches/*.json",
+            "file:///data/matches/*.json",
+            f"{tmp_path}/*/match_1_u.json",  # glob above the leaf
+            f"{tmp_path}/a/match_1_u.json",  # no glob
+            f"{tmp_path}/missing/*.json",
+            f"{tmp_path}/b/*.json",  # has a subdirectory
+        ]:
+            assert scan_root(path) == (path, {})
+        assert scan_root(f"{tmp_path}/a/*.json") == (f"{tmp_path}/a", {"pathGlobFilter": "*.json"})
+
+
 class TestSaltedJoin:
     def test_equals_plain_join(self, spark):
         from cod_stats_spark.operators.skew import salted_join
