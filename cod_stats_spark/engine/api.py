@@ -149,10 +149,10 @@ class Engine:
         return tsm.by_game_timeseries(self.by_game())
 
     def seasonal_daily_timeseries(self) -> DataFrame:
-        return tsm.seasonal_daily_timeseries(self.daily(), self.seasons())
+        return tsm.seasonal_daily_timeseries(self.daily())
 
     def seasonal_by_game_timeseries(self) -> DataFrame:
-        return tsm.seasonal_by_game_timeseries(self.by_game(), self.seasons())
+        return tsm.seasonal_by_game_timeseries(self.by_game())
 
     def player_season_stats(self) -> DataFrame:
         """Season rollup ⋈ placement pivot USING (player_id, season_id) —
@@ -221,10 +221,8 @@ class Engine:
         # is independent of the others, so their Spark actions overlap
         # from a small driver pool (guide §2.6 — actions are only
         # sequential because driver code calls them sequentially).
-        # Serially this method paid ~20 back-to-back scheduler round
-        # trips of tiny top-k jobs. Results are byte-identical: each
-        # payload is built from its own deterministic collect, and the
-        # files are written in the same fixed order as before.
+        # Results are byte-identical: each payload is built from its own
+        # deterministic collect, and the files are written in a fixed order.
         docs: list[tuple[str, object]] = [
             ("leaderboard_bygame.json",
              lambda: rep.leaderboard_bygame_doc(lb.by_game_boards(self.stats_wz(), self.core()))),
@@ -251,11 +249,6 @@ class Engine:
         return written
 
     # per-player document fan-out ------------------------------------
-
-    PLAYER_DOC_SORTS = {
-        "time": ["date_key"],
-        "game": ["date_key", "mode", "kills", "game_id"],
-    }
 
     @staticmethod
     def _grouped_rows(df: DataFrame, group_cols: list[str], sort_cols: list[str]) -> DataFrame:
@@ -296,7 +289,7 @@ class Engine:
 
     def _write_player_docs(self, out_dir: str) -> list[str]:
         from cod_stats_spark.engine.dims import SEASONS
-        from cod_stats_spark.engine.timeseries import TS_METRICS
+        from cod_stats_spark.engine.timeseries import DAILY_SERIES, GAME_SERIES, TS_METRICS
 
         # Every player × every season gets a document, empty ones too: the
         # reference iterates ALL of vw_seasons (generate_lookup_data.sh:
@@ -307,8 +300,8 @@ class Engine:
         combos = [{"player_id": p, "season_id": s[0]} for p in player_ids for s in SEASONS]
         metrics = [tuple(m) for m in TS_METRICS]  # plain data → by-value pickle
 
-        def ts_payload(frames):
-            k1, k2 = frames
+        def ts_job(df, kind, series):
+            order_cols, (k1, k2) = series
 
             def build(rows):
                 return [
@@ -324,27 +317,14 @@ class Engine:
                     for r in rows
                 ]
 
-            return build
+            template = "players/{player_id}_{season_id}_" + kind + "_wz.json"
+            return df, ["player_id", "season_id"], order_cols, combos, template, build
 
         identity = lambda rows: rows  # noqa: E731
 
         jobs = [
-            (
-                self.seasonal_daily_timeseries(),
-                ["player_id", "season_id"],
-                self.PLAYER_DOC_SORTS["time"],
-                combos,
-                "players/{player_id}_{season_id}_time_wz.json",
-                ts_payload((3, 7)),
-            ),
-            (
-                self.seasonal_by_game_timeseries(),
-                ["player_id", "season_id"],
-                self.PLAYER_DOC_SORTS["game"],
-                combos,
-                "players/{player_id}_{season_id}_game_wz.json",
-                ts_payload((10, 25)),
-            ),
+            ts_job(self.seasonal_daily_timeseries(), "time", DAILY_SERIES),
+            ts_job(self.seasonal_by_game_timeseries(), "game", GAME_SERIES),
             (
                 self.player_season_stats(),
                 ["player_id"],

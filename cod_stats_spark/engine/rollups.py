@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cod_stats_spark.engine.dims import MONSTER_KILLS_THRESHOLD, seasons_df
-from cod_stats_spark.operators.interval_join import interval_join
+from cod_stats_spark.engine import metrics as M
+from cod_stats_spark.engine.dims import MONSTER_KILLS_THRESHOLD
 
 
 def daily_stats(stats: DataFrame, monster_threshold: int = MONSTER_KILLS_THRESHOLD) -> DataFrame:
@@ -75,55 +75,31 @@ def by_game_stats(stats: DataFrame, modes: DataFrame,
 
 
 def season_assign(stats: DataFrame) -> DataFrame:
-    """Assign each game its seasons (fan-out: every game is in
-    'lifetime' AND its season — SURVEY.md §7.4.11).
+    """Fan each row out to every season whose inclusive [start, end]
+    ISO-string range holds its ``date_key`` (SURVEY.md §7.4.11: every
+    game is in 'lifetime' AND its season), adding ``season_id``,
+    ``descr`` and ``sort_order``.
 
-    Fast path exploiting the dim's structure: the non-lifetime seasons
-    PARTITION the timeline, so membership is a sorted CASE chain over
-    start bounds (pure codegen projection, no join at all); the
-    overlapping 'lifetime' row is a second projection unioned on. The
-    general overlapping-interval case stays in
-    operators/interval_join.py. Rows with no season (outside all
-    bounds) get only the lifetime row — identical to the interval join.
+    One projection: a ``when`` per ``dims.SEASONS`` row, the non-null
+    matches inlined into rows. That is the interval-join semantics for
+    any season table, overlapping or not; rows outside every range
+    drop out.
     """
     from cod_stats_spark.engine.dims import SEASONS
 
-    non_lifetime = sorted(
-        (s for s in SEASONS if s[0] != "lifetime"), key=lambda s: s[2]
-    )
-    lifetime = next(s for s in SEASONS if s[0] == "lifetime")
-
-    # CASE over start bounds descending: first start <= date_key wins;
-    # the end bound still applies (gaps between seasons exist in theory)
-    expr = F.lit(None).cast("string")
-    descr_expr = F.lit(None).cast("string")
-    sort_expr = F.lit(None).cast("int")
-    for sid, descr, start, end, sort_order in non_lifetime:
-        cond = (F.col("date_key") >= start) & (F.col("date_key") <= end)
-        expr = F.when(cond, F.lit(sid)).otherwise(expr)
-        descr_expr = F.when(cond, F.lit(descr)).otherwise(descr_expr)
-        sort_expr = F.when(cond, F.lit(sort_order)).otherwise(sort_expr)
-
-    in_season = stats.withColumns(
-        {"season_id": expr, "descr": descr_expr, "sort_order": sort_expr}
-    ).filter(F.col("season_id").isNotNull())
-    in_lifetime = stats.filter(
-        (F.col("date_key") >= lifetime[2]) & (F.col("date_key") <= lifetime[3])
-    ).withColumns(
-        {
-            "season_id": F.lit(lifetime[0]),
-            "descr": F.lit(lifetime[1]),
-            "sort_order": F.lit(lifetime[4]),
-        }
-    )
-    return in_season.unionByName(in_lifetime)
-
-
-def season_assign_general(stats: DataFrame) -> DataFrame:
-    """Reference implementation via the generic interval join (used to
-    cross-check the fast path in tests)."""
-    seasons = seasons_df(stats.sparkSession).withColumnRenamed("id", "season_id")
-    return interval_join(stats, seasons, "date_key", "start", "end")
+    date_key = F.col("date_key")
+    matches = F.array(*[
+        F.when(
+            (date_key >= start) & (date_key <= end),
+            F.struct(
+                F.lit(sid).alias("season_id"),
+                F.lit(descr).alias("descr"),
+                F.lit(sort_order).alias("sort_order"),
+            ),
+        )
+        for sid, descr, start, end, sort_order in SEASONS
+    ])
+    return stats.select("*", F.inline(F.filter(matches, lambda s: s.isNotNull())))
 
 
 def season_rollup(stats: DataFrame) -> DataFrame:
@@ -139,30 +115,13 @@ def season_rollup(stats: DataFrame) -> DataFrame:
         F.sum("gulagKills").alias("gulagWins"),
         F.sum("gulagDeaths").alias("gulagLosses"),
     )
-    deaths_f = F.col("deaths").cast("double")
-    gulag_total = F.col("gulagWins") + F.col("gulagLosses")
     return agg.select(
-        "player_id",
-        "season_id",
-        "descr",
-        "sort_order",
-        "matches",
-        "damage",
-        "kills",
-        "deaths",
-        "gulagWins",
-        "gulagLosses",
-        F.round(F.when(deaths_f != 0, F.col("kills") / deaths_f), 2).alias("kdRatio"),
+        "*",
+        F.round(M.kd_sql(F.col("kills"), F.col("deaths")), 2).alias("kdRatio"),
         F.round(F.col("kills") / F.col("matches").cast("double"), 2).alias("killsPerGame"),
         F.round(F.col("damage") / F.col("matches").cast("double"), 2).alias("damagePerGame"),
-        # integer division semantics preserved (SURVEY.md §7.4.1)
-        F.when(F.col("kills") != 0, (F.col("damage") / F.col("kills")).cast("long")).alias(
-            "damagePerKill"
-        ),
-        F.when(
-            gulag_total != 0,
-            (F.lit(100) * F.col("gulagWins") / gulag_total).cast("long"),
-        ).alias("gulagWinPct"),
+        M.damage_per_kill_int(F.col("damage"), F.col("kills")).alias("damagePerKill"),
+        M.gulag_win_pct_int(F.col("gulagWins"), F.col("gulagLosses")).alias("gulagWinPct"),
     )
 
 

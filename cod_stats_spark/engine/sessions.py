@@ -40,22 +40,10 @@ def sessionized_games(stats: DataFrame, gap_seconds: int = SESSION_DELTA_SECONDS
 
 def player_sessions(stats: DataFrame, gap_seconds: int = SESSION_DELTA_SECONDS) -> DataFrame:
     """(player_id, session_number, session_id, start, end) — the
-    reference's session interval table, derived from the carried
-    session ids rather than a lead-over-flags self-join."""
-    s = sessionized_games(stats, gap_seconds)
-    per = s.groupBy("player_id", "session_number", "session_id").agg(
-        F.min("date_key").alias("start"), F.min("_epoch").alias("_start_epoch")
-    )
-    w = Window.partitionBy("player_id").orderBy("_start_epoch")
-    end_epoch = F.coalesce(
-        F.lead("_start_epoch").over(w), F.lit(SESSION_OPEN_END_EPOCH)
-    ) - F.lit(1)
-    return per.select(
-        "player_id",
-        "session_number",
-        "session_id",
-        "start",
-        F.date_format(F.to_timestamp(F.from_unixtime(end_epoch)), ISO).alias("end"),
+    reference's session interval table, a projection of
+    ``session_stats`` (the optimizer prunes the unread aggregates)."""
+    return session_stats(stats, gap_seconds).select(
+        "player_id", "session_number", "session_id", "start", "end"
     )
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cod_stats_spark.engine.rollups import season_assign
 from cod_stats_spark.operators.rolling import cumulative_frames, rolling_frames
 
 TS_METRICS = [
@@ -39,77 +40,51 @@ TS_METRICS = [
 ]
 
 
-def _framed(df: DataFrame, order_cols: list[str], frames: tuple[int, int]) -> DataFrame:
-    k1, k2 = frames
-    out = rolling_frames(df, ["player_id"], order_cols, TS_METRICS, k1 - 1, suffix=f"s{k1}")
-    out = rolling_frames(out, ["player_id"], order_cols, TS_METRICS, k2 - 1, suffix=f"s{k2}")
-    out = cumulative_frames(out, ["player_id"], order_cols, TS_METRICS, suffix="cume")
-    return out
+# (order columns, (short, long) rolling frame sizes) of each series. Both
+# orders are total: date_key is unique per player-day, game_id breaks ties.
+DAILY_SERIES = (["date_key"], (3, 7))
+GAME_SERIES = (["date_key", "mode", "kills", "game_id"], (10, 25))
+
+
+def _framed(df: DataFrame, key_cols: list[str], order_cols: list[str],
+            frames: tuple[int, int]) -> DataFrame:
+    out = df
+    for k in frames:
+        out = rolling_frames(out, key_cols, order_cols, TS_METRICS, k - 1, suffix=f"s{k}")
+    return cumulative_frames(out, key_cols, order_cols, TS_METRICS, suffix="cume")
 
 
 def daily_timeseries(daily: DataFrame) -> DataFrame:
     """vw_player_stats_by_day_wz + smoothed_3/smoothed_7/cumulative
-    frame columns; date_key is unique per player-day so the order is
-    already total."""
-    return _framed(daily, ["date_key"], (3, 7))
+    frame columns."""
+    return _framed(daily, ["player_id"], *DAILY_SERIES)
 
 
 def by_game_timeseries(by_game: DataFrame) -> DataFrame:
-    """Per-game series + smoothed_10/smoothed_25/cumulative frames.
-    game_id tiebreak makes the frame order total (two games can tie on
-    (date_key, mode, kills))."""
-    return _framed(by_game, ["date_key", "mode", "kills", "game_id"], (10, 25))
+    """Per-game series + smoothed_10/smoothed_25/cumulative frames."""
+    return _framed(by_game, ["player_id"], *GAME_SERIES)
 
 
-def filter_season(ts: DataFrame, start: str, end: str) -> DataFrame:
-    """Season slice: inclusive ISO-string range (P9). On partitioned
-    silver this prunes partitions; here it's a pushed filter."""
-    return ts.filter(F.col("date_key").between(start, end))
-
-
-def seasonal_daily_timeseries(daily: DataFrame, seasons: DataFrame) -> DataFrame:
+def seasonal_daily_timeseries(daily: DataFrame) -> DataFrame:
     """Per-(player, season) daily series with frames computed WITHIN the
     season window — the reference runs one query per (player, season)
-    (O(players×seasons) table rescans); here a single interval join
-    fans days into their seasons and ONE window pass frames every
-    (player, season) series.
+    (O(players×seasons) table rescans); here ``season_assign`` fans days
+    into their seasons and ONE window pass frames every (player, season)
+    series.
 
     Boundary quirk preserved: the reference compares the day string
     ('YYYY-MM-DD') lexicographically against the full ISO season bounds,
     so a season's first calendar day sorts BEFORE 'YYYY-MM-DDT...' and
     is excluded — identical here by using the same comparison.
     """
-    from cod_stats_spark.operators.interval_join import interval_join
-
-    s = seasons.select(
-        F.col("id").alias("season_id"), F.col("start"), F.col("end")
-    )
-    joined = interval_join(daily, s, "date_key", "start", "end").drop("start", "end")
-    out = joined
-    for k in (3, 7):
-        out = rolling_frames(
-            out, ["player_id", "season_id"], ["date_key"], TS_METRICS, k - 1, suffix=f"s{k}"
-        )
-    return cumulative_frames(
-        out, ["player_id", "season_id"], ["date_key"], TS_METRICS, suffix="cume"
-    )
+    per_season = season_assign(daily).drop("descr", "sort_order")
+    return _framed(per_season, ["player_id", "season_id"], *DAILY_SERIES)
 
 
-def seasonal_by_game_timeseries(by_game: DataFrame, seasons: DataFrame) -> DataFrame:
+def seasonal_by_game_timeseries(by_game: DataFrame) -> DataFrame:
     """Per-(player, season) per-game series, frames 10/25 + cumulative."""
-    from cod_stats_spark.operators.interval_join import interval_join
-
-    s = seasons.select(F.col("id").alias("season_id"), F.col("start"), F.col("end"))
-    joined = interval_join(by_game, s, "date_key", "start", "end").drop("start", "end")
-    order = ["date_key", "mode", "kills", "game_id"]
-    out = joined
-    for k in (10, 25):
-        out = rolling_frames(
-            out, ["player_id", "season_id"], order, TS_METRICS, k - 1, suffix=f"s{k}"
-        )
-    return cumulative_frames(
-        out, ["player_id", "season_id"], order, TS_METRICS, suffix="cume"
-    )
+    per_season = season_assign(by_game).drop("descr", "sort_order")
+    return _framed(per_season, ["player_id", "season_id"], *GAME_SERIES)
 
 
 def with_ratio_series(ts: DataFrame, suffixes: tuple[str, ...] = ("s3", "s7", "cume")) -> DataFrame:

@@ -378,19 +378,96 @@ class TestSeasonalReports:
         assert any(r["season_id"] == "season05" for r in ps)
 
 
-class TestSeasonAssignFastPath:
-    def test_matches_general_interval_join(self, engine):
+def season_assign_general(stats):
+    """Reference implementation via the generic interval join (used to
+    cross-check the fast path in tests)."""
+    from cod_stats_spark.engine.dims import seasons_df
+    from cod_stats_spark.operators.interval_join import interval_join
+
+    seasons = seasons_df(stats.sparkSession).withColumnRenamed("id", "season_id")
+    return interval_join(stats, seasons, "date_key", "start", "end")
+
+
+class TestSeasonAssign:
+    """``rollups.season_assign`` against the interval-join reference:
+    the same rows, each fanned out to the same seasons."""
+
+    @staticmethod
+    def _same_as_interval_join(df):
+        from collections import Counter
+
         from cod_stats_spark.engine import rollups
 
-        fast = {
-            (r["game_id"], r["player_id"], r["season_id"])
-            for r in rollups.season_assign(engine.stats_wz()).collect()
-        }
-        general = {
-            (r["game_id"], r["player_id"], r["season_id"])
-            for r in rollups.season_assign_general(engine.stats_wz()).collect()
-        }
-        assert fast == general and len(fast) > 0
+        cols = df.columns + ["season_id", "descr", "sort_order"]
+        got = rollups.season_assign(df)
+        assert got.columns == cols
+        got_rows = [tuple(r) for r in got.collect()]
+        want_rows = [tuple(r) for r in season_assign_general(df).select(*cols).collect()]
+        assert Counter(got_rows) == Counter(want_rows)
+        return got_rows
+
+    def test_matches_general_interval_join(self, engine):
+        assert self._same_as_interval_join(engine.stats_wz())
+
+    def test_daily_day_strings(self, engine):
+        assert self._same_as_interval_join(engine.daily())
+
+    def test_boundary_rows(self, spark):
+        from cod_stats_spark.engine.dims import SEASONS
+
+        s05 = next(s for s in SEASONS if s[0] == "season05")
+        keys = ["2020-06-11", s05[2], s05[3], "1970-01-01T00:00:00Z"]
+        df = spark.createDataFrame([(k,) for k in keys], "date_key string")
+        got = {}
+        for r in self._same_as_interval_join(df):
+            got.setdefault(r[0], set()).add(r[1])
+        # a season's first calendar day sorts before its 'YYYY-MM-DDT...' start
+        assert got["2020-06-11"] == {"season03", "lifetime"}
+        assert got[s05[2]] == got[s05[3]] == {"season05", "lifetime"}
+        assert "1970-01-01T00:00:00Z" not in got  # before even 'lifetime'
+
+    def test_overlapping_seasons(self, spark, monkeypatch):
+        from cod_stats_spark.engine import dims
+
+        monkeypatch.setattr(dims, "SEASONS", [
+            dims.SEASONS[0],
+            ("a", "A", "2020-01-01T00:00:00Z", "2020-12-31T23:59:59Z", 3),
+            ("b", "B", "2020-06-01T00:00:00Z", "2021-06-30T23:59:59Z", 2),
+        ])
+        df = spark.createDataFrame(
+            [("2020-03-01T00:00:00Z",), ("2020-07-01T00:00:00Z",), ("2021-03-01T00:00:00Z",)],
+            "date_key string",
+        )
+        got = {(r[0], r[1]) for r in self._same_as_interval_join(df)}
+        assert ("2020-07-01T00:00:00Z", "a") in got and ("2020-07-01T00:00:00Z", "b") in got
+        assert len(got) == 7
+
+
+class TestOperatorFence:
+    def test_engine_imports_only_pipeline_operators(self):
+        """The pipeline uses four operator modules; the rest of
+        ``operators/`` serves the bench queries and stays out of it."""
+        import ast
+        import glob
+        import os
+
+        engine_dir = os.path.join(os.path.dirname(__file__), "..", "cod_stats_spark", "engine")
+        pkg = "cod_stats_spark.operators"
+        used = set()
+        for path in glob.glob(os.path.join(engine_dir, "*.py")):
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    names = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom) and node.module:
+                    names = [node.module]
+                    if node.module == pkg:
+                        names = [f"{pkg}.{a.name}" for a in node.names]
+                else:
+                    continue
+                used |= {n[len(pkg) + 1:].split(".")[0] for n in names if n.startswith(pkg + ".")}
+        assert used == {"sessionize", "rolling", "topk", "streaks"}
 
 
 class TestMetrics:
