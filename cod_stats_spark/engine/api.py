@@ -40,7 +40,6 @@ class Engine:
         spark: SparkSession,
         bronze: DataFrame,
         players: DataFrame,
-        matches_path: str | None = None,
     ):
         from cod_stats_spark.session import prep_session
 
@@ -53,7 +52,6 @@ class Engine:
         self.spark = spark
         self.bronze = bronze
         self.players = players
-        self._matches_path = matches_path
         self._silver: DataFrame | None = None
         self._stats: DataFrame | None = None
 
@@ -63,7 +61,6 @@ class Engine:
             spark,
             ingest.read_matches(spark, matches_path),
             ingest.read_players_config(spark, players_json),
-            matches_path=matches_path,
         )
 
     # ---- layers
@@ -94,9 +91,7 @@ class Engine:
         return normalize.unknown_modes_mp(self.bronze)
 
     def corrupt_matches(self) -> DataFrame:
-        if self._matches_path is None:
-            raise ValueError("corrupt_matches requires Engine.from_paths")
-        return ingest.corrupt_matches(self.spark, self._matches_path)
+        return ingest.corrupt_matches(self.bronze)
 
     # ---- analytics
 
@@ -179,16 +174,13 @@ class Engine:
         "unknown_modes_mp": "unknown_modes_mp",
     }
 
-    def register_views(self, prefix: str = "") -> list[str]:
+    def register_views(self) -> list[str]:
         """Expose the whole view stack to spark.sql() — the reference
         user's SQL workflow keeps working (views are code, not state:
         recreated per session, SURVEY §1.3)."""
-        names = []
         for view, method in self.VIEW_BUILDERS.items():
-            name = f"{prefix}{view}"
-            getattr(self, method)().createOrReplaceTempView(name)
-            names.append(name)
-        return names
+            getattr(self, method)().createOrReplaceTempView(view)
+        return list(self.VIEW_BUILDERS)
 
     def sql(self, query: str) -> DataFrame:
         self.register_views()

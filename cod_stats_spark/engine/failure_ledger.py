@@ -11,11 +11,12 @@ Spark-native re-expression: the ledger is a small parquet table
 ``(key string, fail_count int)``. Candidate work items are filtered
 with a broadcast anti-join against the parked keys (count >= cutoff),
 outcomes fold back in with one union + groupBy, and the rewrite is
-atomic from a reader's perspective (localCheckpoint cuts lineage to
-the files being overwritten, then a single overwrite commit). The
-table is bounded by the number of *currently failing* keys — successes
-delete their rows — so the broadcast stays trivially small at any
-corpus scale; it is state about the pathological tail, not the data.
+atomic from a reader's perspective (the new rows are collected to the
+driver, so no plan reads the files being overwritten, then a single
+overwrite commit). The table is bounded by the number of *currently
+failing* keys — successes delete their rows — so the broadcast and the
+collect stay trivially small at any corpus scale; it is state about
+the pathological tail, not the data.
 """
 
 from __future__ import annotations
@@ -83,5 +84,5 @@ class FailureLedger:
             .agg(F.sum("fail_count").cast("int").alias("fail_count"))
         )
         # cut lineage before overwriting the files the plan reads from
-        new = new.localCheckpoint(eager=True)
+        new = self.spark.createDataFrame(new.collect(), LEDGER_SCHEMA)
         new.write.mode("overwrite").parquet(self.path)

@@ -13,20 +13,35 @@ leaf-only local glob (``<dir>/*.json``) is read as ``<dir>`` with a
 Spark list them in a parallel job with one task per file, while a single
 directory root is listed on the driver with no job at all
 (:func:`scan_root`).
-Incremental loads are a left-anti join against the already-ingested
-key ledger (SURVEY.md P6/S3), not a filesystem diff.
+
+One bronze contract for every consumer — the batch engine, the corrupt
+audit, the API connector and the streaming merge: ``BRONZE_SCHEMA`` is
+read (or ``from_json``-parsed) PERMISSIVE, and :func:`bronze` projects
+it to ``(game_id, player_uno_id, stats, _corrupt_record)``. One rule,
+:func:`unparsed`, says which rows did not parse; the audit lists them
+and the stream's failure ledger counts them. Incremental loads are a
+left-anti join against the already-ingested key ledger (SURVEY.md
+P6/S3, :func:`incremental_new_rows`), not a filesystem diff.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from cod_stats_spark.engine.schemas import MATCH_SCHEMA, PLAYERS_CONFIG_SCHEMA
 
 FILENAME_RE = r".*/match_([^_]+)_([^_/]+)\.json$"
+
+# PERMISSIVE (the default mode) keeps a document that fails to parse as
+# a row of nulls with its text in _corrupt_record (the session-default
+# column name), for spark.read.json, readStream.json and from_json alike
+BRONZE_SCHEMA = StructType(
+    [*MATCH_SCHEMA.fields, StructField("_corrupt_record", StringType())]
+)
 
 _GLOB_CHARS = frozenset("*?[]{}\\")
 
@@ -55,20 +70,31 @@ def scan_root(path: str) -> tuple[str, dict[str, str]]:
     return parent, {"pathGlobFilter": leaf}
 
 
-def _read_json(spark: SparkSession, path: str, schema, **options) -> DataFrame:
-    root, scan = scan_root(path)
-    return spark.read.options(**scan, **options).json(root, schema=schema, multiLine=True)
-
-
-def read_matches(spark: SparkSession, path: str) -> DataFrame:
-    """Raw (bronze) match rows: one row per file, keys from filename."""
-    raw = _read_json(spark, path, MATCH_SCHEMA)
+def bronze(raw: DataFrame) -> DataFrame:
+    """Rows read with ``BRONZE_SCHEMA`` → the bronze contract
+    ``(game_id, player_uno_id, stats, _corrupt_record)``, keys from the
+    ``match_{gameId}_{playerUnoId}.json`` filename."""
     fname = F.input_file_name()
     return raw.select(
         F.regexp_extract(fname, FILENAME_RE, 1).alias("game_id"),
         F.regexp_extract(fname, FILENAME_RE, 2).alias("player_uno_id"),
         F.struct(*[F.col(f.name) for f in MATCH_SCHEMA.fields]).alias("stats"),
+        "_corrupt_record",
     )
+
+
+def unparsed() -> Column:
+    """The one parse-failure rule over bronze: the document did not
+    parse and no matchID came out of it. Naming ``matchID`` also keeps a
+    second column in every pruned scan, so Spark never sees a query over
+    the corrupt-record column alone (QUERY_ONLY_CORRUPT_RECORD_COLUMN)."""
+    return F.col("_corrupt_record").isNotNull() & F.col("stats.matchID").isNull()
+
+
+def read_matches(spark: SparkSession, path: str) -> DataFrame:
+    """Raw (bronze) match rows: one row per file, keys from filename."""
+    root, scan = scan_root(path)
+    return bronze(spark.read.options(**scan).json(root, schema=BRONZE_SCHEMA, multiLine=True))
 
 
 def read_matches_from_api(spark: SparkSession, api_root: str, **options) -> DataFrame:
@@ -85,12 +111,9 @@ def read_matches_from_api(spark: SparkSession, api_root: str, **options) -> Data
     reader = spark.read.format("cod_match_api").option("path", api_root)
     for k, v in options.items():
         reader = reader.option(k, str(v))
-    raw = reader.load()
-    stats = F.from_json("payload", MATCH_SCHEMA).alias("stats")
-    return raw.select(stats).select(
-        F.col("stats.matchID").alias("game_id"),
-        F.col("stats.player.uno").alias("player_uno_id"),
-        "stats",
+    raw = reader.load().select(F.from_json("payload", BRONZE_SCHEMA).alias("p")).select("p.*")
+    return bronze(raw).withColumns(
+        {"game_id": F.col("stats.matchID"), "player_uno_id": F.col("stats.player.uno")}
     )
 
 
@@ -127,36 +150,15 @@ def incremental_new_rows(bronze: DataFrame, ledger: DataFrame | None) -> DataFra
     )
 
 
-def corrupt_matches(spark: SparkSession, path: str) -> DataFrame:
-    """Audit source: files whose JSON failed to parse (the permissive
-    reader silently nulls them out of the bronze path). Companion to
-    the reference's unknown-mode audit views — ingest problems surface
-    in a queryable view instead of disappearing.
+def corrupt_matches(bronze: DataFrame) -> DataFrame:
+    """Audit source: the bronze rows that did not parse (:func:`unparsed`
+    — normalize drops them as null-damage rows, so without this view
+    they would disappear). Companion to the reference's unknown-mode
+    audit views — ingest problems surface in a queryable view.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        [*MATCH_SCHEMA.fields, StructField("_corrupt_record", StringType())]
-    )
-    raw = _read_json(
-        spark, path, schema, mode="PERMISSIVE", columnNameOfCorruptRecord="_corrupt_record"
-    )
-    fname = F.input_file_name()
-    # NB: Spark refuses scans whose referenced source columns are ONLY
-    # the corrupt-record column (QUERY_ONLY_CORRUPT_RECORD_COLUMN).
-    # Downstream pruning (e.g. .count()) can strip every other column,
-    # so the minimal projection is localCheckpoint'ed — the plan then
-    # roots at a materialized RDD and pruning cannot reach the scan.
-    return (
-        raw.select("matchID", "_corrupt_record")
-        .withColumn("_file", fname)
-        .localCheckpoint(eager=False)
-        .filter(F.col("_corrupt_record").isNotNull())
-        .select(
-            F.regexp_extract(F.col("_file"), FILENAME_RE, 1).alias("game_id"),
-            F.regexp_extract(F.col("_file"), FILENAME_RE, 2).alias("player_uno_id"),
-            F.col("matchID").alias("parsed_match_id"),
-            F.col("_file").alias("file"),
-            F.substring("_corrupt_record", 1, 200).alias("snippet"),
-        )
+    return bronze.filter(unparsed()).select(
+        "game_id",
+        "player_uno_id",
+        F.input_file_name().alias("file"),
+        F.substring("_corrupt_record", 1, 200).alias("snippet"),
     )

@@ -21,10 +21,17 @@ to_date(date_key) so season/day queries partition-prune.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cod_stats_spark.engine.dims import GAME_MODES
+
+ISO = "yyyy-MM-dd'T'HH:mm:ss'Z'"
+
+
+def epoch_to_iso(epoch: Column) -> Column:
+    """Epoch seconds → ISO-8601 UTC string (the ``date_key`` format)."""
+    return F.date_format(F.to_timestamp(F.from_unixtime(epoch)), ISO)
 
 
 def stimulus_mode_ids() -> list[str]:
@@ -71,9 +78,7 @@ def normalize_matches(bronze: DataFrame, players: DataFrame) -> DataFrame:
     )
 
     out = bronze.filter(quality).select(
-        F.date_format(
-            F.to_timestamp(F.from_unixtime(s["utcEndSeconds"])), "yyyy-MM-dd'T'HH:mm:ss'Z'"
-        ).alias("date_key"),
+        epoch_to_iso(s["utcEndSeconds"]).alias("date_key"),
         s["gameType"].alias("game_mode"),
         s["mode"].alias("game_mode_sub"),
         "game_id",
@@ -108,12 +113,9 @@ def unknown_modes_wz(bronze: DataFrame) -> DataFrame:
     count (reference vw_unknown_modes_wz, parse_matches.sh:205-215)."""
     s = F.col("stats")
     known = [m[0] for m in GAME_MODES if m[1] == "wz"]
-    iso = F.date_format(
-        F.to_timestamp(F.from_unixtime(s["utcEndSeconds"])), "yyyy-MM-dd'T'HH:mm:ss'Z'"
-    )
     return (
         bronze.filter((s["gameType"] == "wz") & ~s["mode"].isin(known))
-        .select(s["mode"].alias("mode"), iso.alias("date_key"))
+        .select(s["mode"].alias("mode"), epoch_to_iso(s["utcEndSeconds"]).alias("date_key"))
         .groupBy("mode")
         .agg(
             F.min("date_key").alias("firstSeen"),

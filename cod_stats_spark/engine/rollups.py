@@ -17,7 +17,7 @@ from cod_stats_spark.engine import metrics as M
 from cod_stats_spark.engine.dims import MONSTER_KILLS_THRESHOLD
 
 
-def daily_stats(stats: DataFrame, monster_threshold: int = MONSTER_KILLS_THRESHOLD) -> DataFrame:
+def daily_stats(stats: DataFrame) -> DataFrame:
     """Per (player, day) rollup — tumbling day buckets on the ISO string
     prefix (identical to date(date_key))."""
     return (
@@ -34,14 +34,14 @@ def daily_stats(stats: DataFrame, monster_threshold: int = MONSTER_KILLS_THRESHO
             F.sum("distanceTraveled").alias("distanceTraveled"),
             F.avg("kdRatio").alias("kdRatio"),  # avg-of-ratios, per reference
             F.avg("scorePerMinute").alias("scorePerMinute"),
-            F.sum(F.when(F.col("kills") >= monster_threshold, 1).otherwise(0)).alias("monsters"),
+            F.sum(F.when(F.col("kills") >= MONSTER_KILLS_THRESHOLD, 1).otherwise(0))
+            .alias("monsters"),
             F.sum(F.when(F.col("kills") == 0, 1).otherwise(0)).alias("gooseeggs"),
         )
     )
 
 
-def by_game_stats(stats: DataFrame, modes: DataFrame,
-                  monster_threshold: int = MONSTER_KILLS_THRESHOLD) -> DataFrame:
+def by_game_stats(stats: DataFrame, modes: DataFrame) -> DataFrame:
     """Per-game rows with display mode + monster/gooseegg flags
     (reference vw_player_stats_by_game_wz; 'Unknown &lt;mode&gt;'
     fallback preserved byte-for-byte, SURVEY.md §7.4.10)."""
@@ -68,7 +68,7 @@ def by_game_stats(stats: DataFrame, modes: DataFrame,
             "distanceTraveled",
             "kdRatio",
             "scorePerMinute",
-            F.when(F.col("kills") >= monster_threshold, 1).otherwise(0).alias("monsters"),
+            F.when(F.col("kills") >= MONSTER_KILLS_THRESHOLD, 1).otherwise(0).alias("monsters"),
             F.when(F.col("kills") == 0, 1).otherwise(0).alias("gooseeggs"),
         )
     )

@@ -89,31 +89,3 @@ PLAYERS_CONFIG_SCHEMA = StructType(
         ),
     ]
 )
-
-# silver fact-table column order (reference wz_valid_games DDL,
-# parser/parse_matches.sh:62-98)
-VALID_GAMES_COLUMNS = [
-    "date_key",
-    "game_mode",
-    "game_mode_sub",
-    "game_id",
-    "player_uno_id",
-    "numberOfPlayers",
-    "numberOfTeams",
-    "score",
-    "scorePerMinute",
-    "kills",
-    "deaths",
-    "damageDone",
-    "damageTaken",
-    "gulagKills",
-    "gulagDeaths",
-    "teamPlacement",
-    "kdRatio",
-    "distanceTraveled",
-    "headshots",
-    "objectiveBrCacheOpen",
-    "objectiveReviver",
-    "objectiveBrDownAll",
-    "objectiveDestroyedVehicleAll",
-]

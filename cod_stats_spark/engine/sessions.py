@@ -18,12 +18,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cod_stats_spark.engine.dims import SESSION_DELTA_SECONDS, SESSION_OPEN_END_EPOCH
+from cod_stats_spark.engine.normalize import ISO, epoch_to_iso
 from cod_stats_spark.operators.sessionize import sessionize
 
-ISO = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
-
-def sessionized_games(stats: DataFrame, gap_seconds: int = SESSION_DELTA_SECONDS) -> DataFrame:
+def sessionized_games(stats: DataFrame) -> DataFrame:
     """stats_wz + (session_number, session_id) per row."""
     with_epoch = stats.withColumn(
         "_epoch", F.unix_timestamp(F.col("date_key"), ISO)
@@ -32,24 +31,24 @@ def sessionized_games(stats: DataFrame, gap_seconds: int = SESSION_DELTA_SECONDS
         with_epoch,
         ts_col="_epoch",
         key_cols=["player_id"],
-        gap_seconds=gap_seconds,
+        gap_seconds=SESSION_DELTA_SECONDS,
         tiebreak_cols=["game_id"],
     )
     return out
 
 
-def player_sessions(stats: DataFrame, gap_seconds: int = SESSION_DELTA_SECONDS) -> DataFrame:
+def player_sessions(stats: DataFrame) -> DataFrame:
     """(player_id, session_number, session_id, start, end) — the
     reference's session interval table, a projection of
     ``session_stats`` (the optimizer prunes the unread aggregates)."""
-    return session_stats(stats, gap_seconds).select(
+    return session_stats(stats).select(
         "player_id", "session_number", "session_id", "start", "end"
     )
 
 
-def session_stats(stats: DataFrame, gap_seconds: int = SESSION_DELTA_SECONDS) -> DataFrame:
+def session_stats(stats: DataFrame) -> DataFrame:
     """Per-session rollup (reference vw_player_sessions_with_stats)."""
-    s = sessionized_games(stats, gap_seconds)
+    s = sessionized_games(stats)
     def topn(n):
         return F.sum(F.when(F.col("teamPlacement") <= n, 1).otherwise(0))
 
@@ -72,9 +71,7 @@ def session_stats(stats: DataFrame, gap_seconds: int = SESSION_DELTA_SECONDS) ->
     end_epoch = F.coalesce(
         F.lead("_start_epoch").over(w), F.lit(SESSION_OPEN_END_EPOCH)
     ) - F.lit(1)
-    return rolled.withColumn(
-        "end", F.date_format(F.to_timestamp(F.from_unixtime(end_epoch)), ISO)
-    ).drop("_start_epoch")
+    return rolled.withColumn("end", epoch_to_iso(end_epoch)).drop("_start_epoch")
 
 
 def latest_session_per_player(session_stats_df: DataFrame) -> DataFrame:

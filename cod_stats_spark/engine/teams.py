@@ -26,14 +26,15 @@ from cod_stats_spark.engine.stats import stats_struct
 FULL_TEAM_SIZES = {"wz_solo": 1, "wz_duos": 2, "wz_trios": 3, "wz_quads": 4}
 
 
+def core_game_rows(stats: DataFrame, core: DataFrame) -> DataFrame:
+    """Every player row of the games where >=1 core player played."""
+    core_games = stats.join(F.broadcast(core), "player_id", "left_semi").select("game_id")
+    return stats.join(core_games.distinct(), "game_id", "left_semi")
+
+
 def full_game_stats(stats: DataFrame, core: DataFrame) -> DataFrame:
     """Per-game roster + stats array over games with >=1 core player."""
-    core_games = (
-        stats.join(F.broadcast(core), "player_id", "left_semi")
-        .select("game_id")
-        .distinct()
-    )
-    per_player = stats.join(core_games, "game_id", "left_semi").select(
+    per_player = core_game_rows(stats, core).select(
         "date_key",
         "game_id",
         "game_mode_sub",
@@ -63,13 +64,8 @@ def team_stat_breakdowns(stats: DataFrame, core: DataFrame) -> DataFrame:
         *[F.lit(x) for pair in modes for x in pair]
     )[F.col("game_mode_sub")]
 
-    core_games = (
-        stats.join(F.broadcast(core), "player_id", "left_semi")
-        .select("game_id")
-        .distinct()
-    )
     per_game = (
-        stats.join(core_games, "game_id", "left_semi")
+        core_game_rows(stats, core)
         .withColumn("category", cat)
         .groupBy("game_id")
         .agg(

@@ -8,6 +8,12 @@ INSERT-OR-IGNORE semantics (anti-join against the natural key ledger)
 inside foreachBatch — exactly-once per file from the source's file
 tracking, idempotent per key from the merge.
 
+The stream shares the batch path's definitions (engine/ingest.py): the
+one bronze reader (``BRONZE_SCHEMA`` + ``bronze``), the one
+parse-failure rule (``unparsed``) and the one key anti-join
+(``incremental_new_rows``). So a micro-batch lands in silver exactly
+the rows ``Engine.valid_games`` would keep for the same files.
+
 foreachBatch (not a plain writeStream) because normalization ends in a
 keyed dedup against EXISTING silver — a batch-side merge, the pattern
 Spark documents for exactly-once upsert sinks.
@@ -18,26 +24,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from cod_stats_spark.engine.ingest import FILENAME_RE
+from cod_stats_spark.engine.ingest import (
+    BRONZE_SCHEMA,
+    bronze,
+    incremental_new_rows,
+    unparsed,
+)
 from cod_stats_spark.engine.normalize import normalize_matches
-from cod_stats_spark.engine.schemas import MATCH_SCHEMA
 
 
 def stream_matches(spark: SparkSession, matches_dir: str) -> DataFrame:
     """readStream of match JSON files → bronze rows (filename keys)."""
-    raw = (
-        spark.readStream.schema(MATCH_SCHEMA)
-        .option("multiLine", "true")
-        .json(matches_dir)
-    )
-    fname = F.input_file_name()
-    return raw.select(
-        F.regexp_extract(fname, FILENAME_RE, 1).alias("game_id"),
-        F.regexp_extract(fname, FILENAME_RE, 2).alias("player_uno_id"),
-        F.struct(*[F.col(f.name) for f in MATCH_SCHEMA.fields]).alias("stats"),
-    )
+    return bronze(spark.readStream.schema(BRONZE_SCHEMA).json(matches_dir, multiLine=True))
 
 
 def stream_matches_to_silver(
@@ -55,39 +54,28 @@ def stream_matches_to_silver(
 
     ``failure_ledger`` (engine.failure_ledger.FailureLedger) is the S5
     dead-letter path for RESTARTS: the file source reads each file once
-    per checkpoint, so a poison file (unparseable JSON — every schema
-    field nulls out) is re-attempted on every fresh-checkpoint restart
-    forever, since it never lands in silver for the anti-join to catch.
-    With a ledger: parked keys (fail_count >= cutoff) are filtered out
-    before normalize, parse failures increment their key, and a later
+    per checkpoint, so a poison file (one that is ``unparsed``) is
+    re-attempted on every fresh-checkpoint restart forever, since it
+    never lands in silver for the anti-join to catch. With a ledger:
+    parked keys (fail_count >= cutoff) are filtered out before
+    normalize, parse failures increment their key, and a later
     successful parse deletes it — the reference fetcher's exact replay
     contract (fetch_matches.ts:163,200,209).
     """
-    bronze = stream_matches(spark, matches_dir)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if failure_ledger is not None:
             batch_df = failure_ledger.filter_replayable(batch_df, "game_id")
             batch_df = batch_df.persist()
-        # parse failure marker: the permissive reader nulls out every
-        # schema field for an unparseable document, so a null matchID
-        # distinguishes poison files from valid rows that downstream
-        # quality filters may still drop (those are not "failures")
-        parsed_ok = batch_df.filter(F.col("stats.matchID").isNotNull())
-        silver_new = normalize_matches(parsed_ok, players)
-        if os.path.exists(silver_path):
-            existing = spark.read.parquet(silver_path).select(
-                "game_id", "player_uno_id"
-            )
-            silver_new = silver_new.join(
-                existing, ["game_id", "player_uno_id"], "left_anti"
-            )
+        existing = spark.read.parquet(silver_path) if os.path.exists(silver_path) else None
+        silver_new = incremental_new_rows(normalize_matches(batch_df, players), existing)
         silver_new.write.mode("append").parquet(silver_path)
         if failure_ledger is not None:
-            failure_ledger.record(batch_df, parsed_ok, "game_id")
+            failure_ledger.record(batch_df, batch_df.filter(~unparsed()), "game_id")
             batch_df.unpersist()
 
-    writer = bronze.writeStream.foreachBatch(merge_batch).outputMode("append")
+    writer = stream_matches(spark, matches_dir).writeStream.foreachBatch(merge_batch)
+    writer = writer.outputMode("append")
     if checkpoint_path:
         writer = writer.option("checkpointLocation", checkpoint_path)
     return writer.start()

@@ -65,18 +65,15 @@ class TestListingRewrite:
 
     def test_same_files_as_glob(self, spark, fixture_dirs):
         from cod_stats_spark.engine import ingest
-        from cod_stats_spark.engine.schemas import MATCH_SCHEMA
 
         mdir, _ = fixture_dirs
         glob = f"{mdir}/*.json"
         assert ingest.scan_root(glob) == (mdir, {"pathGlobFilter": "*.json"})
-        rewritten = self._files(ingest._read_json(spark, glob, MATCH_SCHEMA))
-        as_glob = self._files(spark.read.json(glob, schema=MATCH_SCHEMA, multiLine=True))
+        bronze = ingest.read_matches(spark, glob)
+        rewritten = self._files(bronze)
+        as_glob = self._files(spark.read.json(glob, schema=ingest.BRONZE_SCHEMA, multiLine=True))
         assert rewritten == as_glob and len(rewritten) > 20
-        keys = {
-            (r["game_id"], r["player_uno_id"])
-            for r in ingest.read_matches(spark, glob).collect()
-        }
+        keys = {(r["game_id"], r["player_uno_id"]) for r in bronze.collect()}
         assert len(keys) == len(as_glob)
 
     def test_subdirectory_file_not_picked_up(self, spark, fixture_dirs, tmp_path):
@@ -153,14 +150,51 @@ class TestCorruptAudit:
         work = tmp_path / "m"
         shutil.copytree(mdir, work)
         (work / "match_gbad_unoX.json").write_text("{this is not json")
+        # a type mismatch is a partial parse (matchID survives): not a
+        # parse failure under ingest.unparsed
+        doc = js.loads((work / "match_g001_uno-a1.json").read_text())
+        doc["playerStats"]["kills"] = "lots"
+        (work / "match_gmix_uno-a1.json").write_text(js.dumps(doc))
         from cod_stats_spark.engine import Engine
 
         eng = Engine.from_paths(spark, f"{work}/*.json", pj)
-        bad = [r.asDict() for r in eng.corrupt_matches().collect()]
+        audit = eng.corrupt_matches()
+        bad = [r.asDict() for r in audit.collect()]
         assert len(bad) == 1
-        assert bad[0]["game_id"] == "gbad"
+        assert bad[0]["game_id"] == "gbad" and bad[0]["player_uno_id"] == "unoX"
+        assert bad[0]["file"].endswith("match_gbad_unoX.json")
+        assert bad[0]["snippet"] == "{this is not json"
+        # a pruned scan (no audit column read) still names matchID, so
+        # Spark accepts it without materializing anything first
+        assert audit.count() == 1
         # and the corrupt file is NOT in bronze valid rows
         assert eng.valid_games().filter("game_id = 'gbad'").count() == 0
+
+    def test_api_bronze_audit_is_empty(self, spark, fixture_dirs, tmp_path):
+        """Every Engine has the audit, whatever its bronze source: the
+        connector emits the same four columns as the file reader."""
+        import json as js
+        import pathlib
+
+        from cod_stats_spark.engine import Engine
+        from cod_stats_spark.engine.ingest import read_matches_from_api, read_players_config
+
+        mdir, pj = fixture_dirs
+        (tmp_path / "pages").mkdir()
+        (tmp_path / "details").mkdir()
+        ids = [f.stem.replace("match_", "") for f in sorted(pathlib.Path(mdir).glob("*.json"))]
+        (tmp_path / "pages" / "page_0.json").write_text(
+            js.dumps({"match_ids": ids, "next_page": None})
+        )
+        for mid in ids:
+            (tmp_path / "details" / f"{mid}.json").write_text(
+                pathlib.Path(mdir, f"match_{mid}.json").read_text()
+            )
+        bronze = read_matches_from_api(spark, str(tmp_path))
+        eng = Engine(spark, bronze, read_players_config(spark, pj))
+        assert eng.corrupt_matches().count() == 0
+        assert eng.valid_games().count() > 0
+        assert bronze.columns == ["game_id", "player_uno_id", "stats", "_corrupt_record"]
 
 
 class TestBucketedSilver:

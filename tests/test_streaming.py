@@ -372,6 +372,44 @@ class TestMatchIngestStream:
         finally:
             q.stop()
 
+    def test_stream_silver_equals_batch(self, spark, fixture_dirs, tmp_path):
+        """Stream ≡ batch over the same files: the stream's silver holds
+        exactly the rows of Engine.valid_games — a well-formed file with
+        no matchID included — and the failure ledger stays empty, since
+        both paths share one bronze reader and one parse-failure rule."""
+        import json as js
+        import shutil
+
+        from cod_stats_spark.engine import Engine
+        from cod_stats_spark.engine.failure_ledger import FailureLedger
+        from cod_stats_spark.engine.ingest import read_players_config
+        from cod_stats_spark.streaming.match_ingest import stream_matches_to_silver
+
+        mdir, pj = fixture_dirs
+        src = tmp_path / "incoming"
+        shutil.copytree(mdir, src)
+        doc = js.loads((src / "match_g001_uno-a1.json").read_text())
+        del doc["matchID"]
+        doc["utcEndSeconds"] += 555
+        (src / "match_gNOID_uno-a1.json").write_text(js.dumps(doc))
+        silver = str(tmp_path / "silver")
+        ledger = FailureLedger(spark, str(tmp_path / "ledger"))
+
+        q = stream_matches_to_silver(
+            spark, str(src), read_players_config(spark, pj), silver,
+            str(tmp_path / "ckpt"), failure_ledger=ledger,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        batch = Engine.from_paths(spark, f"{src}/*.json", pj).valid_games()
+        assert batch.filter("game_id = 'gNOID'").count() == 1
+        streamed = spark.read.parquet(silver).select(*batch.columns)
+        assert set(map(tuple, streamed.collect())) == set(map(tuple, batch.collect()))
+        assert streamed.count() == batch.count()
+        assert ledger.counts().collect() == []
+
 
 class TestFailureLedger:
     def test_poison_file_retried_then_parked_at_cutoff(self, spark, fixture_dirs, tmp_path):

@@ -17,7 +17,8 @@ sys.path.insert(0, ".")
 
 
 def synth_bronze(spark, n_rows: int, n_players: int):
-    """Deterministic synthetic bronze (game_id, player_uno_id, stats)."""
+    """Deterministic synthetic bronze (game_id, player_uno_id, stats,
+    _corrupt_record): the ingest bronze contract, every row parsed."""
     import pyspark.sql.functions as F
 
     from cod_stats_spark.engine.dims import GAME_MODES
@@ -74,7 +75,10 @@ def synth_bronze(spark, n_rows: int, n_players: int):
         player_stats.alias("playerStats"),
     )
     return base.select(
-        game.alias("game_id"), uno.alias("player_uno_id"), stats.alias("stats")
+        game.alias("game_id"),
+        uno.alias("player_uno_id"),
+        stats.alias("stats"),
+        F.lit(None).cast("string").alias("_corrupt_record"),
     ).repartition(spark.sparkContext.defaultParallelism)
 
 
