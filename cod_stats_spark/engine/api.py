@@ -46,8 +46,8 @@ class Engine:
         # date_key derivation (from_unixtime) and the oracle dialect both
         # assume UTC + non-ANSI; normalize regardless of who built the
         # session. No ship_package: the engine's plans are built-in
-        # Column expressions and its one worker-side function
-        # (_executor_write) is pickled by value.
+        # Column expressions and its one worker-side function (the
+        # per-player writer in _write_player_docs) is pickled by value.
         prep_session(spark)
         self.spark = spark
         self.bronze = bronze
@@ -193,11 +193,16 @@ class Engine:
 
         Top-k documents (boards, recents, dims) are tiny by
         construction and collected to the driver. Per-player documents
-        are written DISTRIBUTED: each (player, season) group is folded
-        to one row executor-side and written from mapPartitions, so
-        the driver never holds the full timeseries/session row set
-        (``out_dir`` must be driver+executor-visible storage — true in
-        local mode and for shared filesystems/object stores).
+        are written DISTRIBUTED: one grouped pass folds each player's
+        four document families to one row and one mapPartitions writes
+        that player's whole file set, so the driver never holds the
+        timeseries/session rows (``out_dir`` must be driver+executor-
+        visible storage — true in local mode and for shared
+        filesystems/object stores). Returns every written path once.
+
+        Raises ValueError (surfaced through Spark's task failure) when a
+        player id is empty, ``.``/``..`` or holds a path separator: ids
+        come from config names and name the player files.
         """
         from concurrent.futures import ThreadPoolExecutor
 
@@ -242,108 +247,78 @@ class Engine:
 
     # per-player document fan-out ------------------------------------
 
-    @staticmethod
-    def _grouped_rows(df: DataFrame, group_cols: list[str], sort_cols: list[str]) -> DataFrame:
-        """One row per group: (group_cols..., rows) with ``rows`` the
-        group's full rows sorted by ``sort_cols`` (original column
-        order preserved via the k/v struct trick — sort_array orders
-        structs field-by-field)."""
+    def _write_player_docs(self, out_dir: str) -> list[str]:
+        """Every player's documents from one grouped pass and one action:
+        ``{p}_player_stats``, ``sessions_{p}`` and, for every SEASONS id,
+        the time and game series, ``[]`` where a season has no rows (the
+        reference iterates ALL of vw_seasons, generate_lookup_data.sh:
+        892-932). Each family is projected to (player_id, struct(k, v)),
+        unioned with the players dim and collected per player, sorted by
+        k; collect_list skips the union's nulls, so a player with no games
+        gets four empty arrays. Returns the written paths."""
         from pyspark.sql import functions as F
 
-        kv = F.struct(
-            F.struct(*[F.col(c) for c in sort_cols]).alias("k"),
-            F.struct(*[F.col(c) for c in df.columns]).alias("v"),
-        )
-        return df.groupBy(*group_cols).agg(
-            F.transform(F.array_sort(F.collect_list(kv)), lambda x: x["v"]).alias("rows")
-        )
-
-    @staticmethod
-    def _executor_write(df: DataFrame, out_dir: str, rel_template: str, payload_fn) -> list[str]:
-        """Executor-side writer: each row becomes one JSON file; returns
-        the written paths, so the one action both writes and lists.
-        ``payload_fn`` must be self-contained (pickled by value) —
-        module references would require the package on worker paths."""
-
-        def write_part(it):
-            import json as _json
-            import os as _os
-
-            for r in it:
-                d = r.asDict(recursive=True)
-                path = _os.path.join(out_dir, rel_template.format(**d))
-                _os.makedirs(_os.path.dirname(path), exist_ok=True)
-                with open(path, "w") as f:
-                    _json.dump(payload_fn(d.get("rows") or []), f, separators=(",", ":"))
-                yield path
-
-        return df.rdd.mapPartitions(write_part).collect()
-
-    def _write_player_docs(self, out_dir: str) -> list[str]:
         from cod_stats_spark.engine.dims import SEASONS
         from cod_stats_spark.engine.timeseries import DAILY_SERIES, GAME_SERIES, TS_METRICS
 
-        # Every player × every season gets a document, empty ones too: the
-        # reference iterates ALL of vw_seasons (generate_lookup_data.sh:
-        # 892-932). Executors write the groups that have rows; the driver
-        # writes [] for the rest of the key set, players × SEASONS.
-        player_ids = sorted({r[0] for r in self.players.select("player_id").collect()})
-        players = [{"player_id": p} for p in player_ids]
-        combos = [{"player_id": p, "season_id": s[0]} for p in player_ids for s in SEASONS]
-        metrics = [tuple(m) for m in TS_METRICS]  # plain data → by-value pickle
+        families = {
+            "time": (self.seasonal_daily_timeseries(), ["season_id", *DAILY_SERIES[0]]),
+            "game": (self.seasonal_by_game_timeseries(), ["season_id", *GAME_SERIES[0]]),
+            "stats": (self.player_season_stats(), ["sort_order"]),
+            "sessions": (self.session_stats(), ["session_number"]),
+        }
+        union = self.players.select("player_id")
+        for name, (df, sort_cols) in families.items():
+            kv = F.struct(F.struct(*sort_cols).alias("k"), F.struct(*df.columns).alias("v"))
+            union = union.unionByName(
+                df.select("player_id", kv.alias(name)), allowMissingColumns=True
+            )
+        grouped = union.groupBy("player_id").agg(*[
+            F.transform(F.array_sort(F.collect_list(name)), lambda x: x["v"]).alias(name)
+            for name in families
+        ])
 
-        def ts_job(df, kind, series):
-            order_cols, (k1, k2) = series
+        # plain data only: the writer is pickled by value
+        season_ids = [s[0] for s in SEASONS]
+        series = {"time": DAILY_SERIES[1], "game": GAME_SERIES[1]}
+        metrics = [tuple(m) for m in TS_METRICS]
 
-            def build(rows):
-                return [
-                    {
-                        "date": r.get("date_key"),
-                        "stats": {
-                            "raw": {m: r.get(m) for m, _ in metrics},
-                            f"smoothed_{k1}": {m: r.get(f"{m}_{a}_s{k1}") for m, a in metrics},
-                            f"smoothed_{k2}": {m: r.get(f"{m}_{a}_s{k2}") for m, a in metrics},
-                            "cumalative": {m: r.get(f"{m}_{a}_cume") for m, a in metrics},
-                        },
-                    }
-                    for r in rows
-                ]
+        def write_part(it):
+            import json
+            import os
 
-            template = "players/{player_id}_{season_id}_" + kind + "_wz.json"
-            return df, ["player_id", "season_id"], order_cols, combos, template, build
+            players_dir = os.path.join(out_dir, "players")
 
-        identity = lambda rows: rows  # noqa: E731
+            def dump(name, payload):
+                path = os.path.join(players_dir, name)
+                with open(path, "w") as f:
+                    json.dump(payload, f, separators=(",", ":"))
+                return path
 
-        jobs = [
-            ts_job(self.seasonal_daily_timeseries(), "time", DAILY_SERIES),
-            ts_job(self.seasonal_by_game_timeseries(), "game", GAME_SERIES),
-            (
-                self.player_season_stats(),
-                ["player_id"],
-                ["sort_order"],
-                players,
-                "players/{player_id}_player_stats.json",
-                identity,
-            ),
-            (
-                self.session_stats(),
-                ["player_id"],
-                ["session_number"],
-                players,
-                "players/sessions_{player_id}.json",
-                identity,
-            ),
-        ]
-        written = []
-        for df, group_cols, sort_cols, keys, template, payload_fn in jobs:
-            grouped = self._grouped_rows(df, group_cols, sort_cols)
-            nonempty = set(self._executor_write(grouped, out_dir, template, payload_fn))
-            for key in keys:
-                path = os.path.join(out_dir, template.format(**key))
-                if path not in nonempty:
-                    rep.write_json(path, [])
-                written.append(path)
-        return written
+            for row in it:
+                d = row.asDict(recursive=True)
+                p = d["player_id"]
+                if not p or p in (".", "..") or "/" in p or "\\" in p:
+                    raise ValueError(f"player id {p!r} is not a safe file name")
+                os.makedirs(players_dir, exist_ok=True)
+                yield dump(f"{p}_player_stats.json", d["stats"])
+                yield dump(f"sessions_{p}.json", d["sessions"])
+                for kind, (k1, k2) in series.items():
+                    by_season: dict[str, list] = {}
+                    for r in d[kind]:
+                        by_season.setdefault(r["season_id"], []).append({
+                            "date": r["date_key"],
+                            "stats": {
+                                "raw": {m: r[m] for m, _ in metrics},
+                                f"smoothed_{k1}": {m: r[f"{m}_{a}_s{k1}"] for m, a in metrics},
+                                f"smoothed_{k2}": {m: r[f"{m}_{a}_s{k2}"] for m, a in metrics},
+                                "cumalative": {m: r[f"{m}_{a}_cume"] for m, a in metrics},
+                            },
+                        })
+                    for s in season_ids:
+                        yield dump(f"{p}_{s}_{kind}_wz.json", by_season.get(s, []))
+
+        return grouped.rdd.mapPartitions(write_part).collect()
 
 
 def write_silver(

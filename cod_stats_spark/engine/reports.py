@@ -1,12 +1,12 @@
 """JSON report documents (reference frontend/generate_lookup_data.sh —
 the S9/S10 sink family).
 
-Every report is a SMALL result (top-k rows, per-player series) — the
-heavy work happened in distributed aggregations; documents are
-collected to the driver and written as single JSON files, mirroring
-the reference's static-file serving layer. At cluster scale the same
-DataFrames can instead be written with df.write.json per partition
-key; the shapes are identical.
+The top-k documents here (boards, recents, dims) are SMALL results —
+the heavy work happened in distributed aggregations; they are collected
+to the driver and written as single JSON files, mirroring the
+reference's static-file serving layer. The per-player documents are not
+collected: ``Engine.write_reports`` writes them from the executors, one
+grouped pass for every player's whole file set.
 """
 
 from __future__ import annotations

@@ -229,6 +229,36 @@ class TestReports:
         }
         tsdoc = js.loads((tmp_path / "players/alice_lifetime_time_wz.json").read_text())
         assert tsdoc and "stats" in tsdoc[0] and "cumalative" in tsdoc[0]["stats"]
+        # the returned list is exactly the files on disk, each listed once
+        on_disk = {str(p) for p in tmp_path.rglob("*") if p.is_file()}
+        assert len(files) == len(set(files))
+        assert set(files) == on_disk
+
+    def test_unsafe_player_id_raises(self, spark, fixture_dirs, tmp_path):
+        """Player ids come from config names and name the player files:
+        one that would leave ``out_dir`` makes write_reports raise, and
+        nothing is written outside ``out_dir``."""
+        import json as js
+
+        import pytest
+
+        from cod_stats_spark.engine import Engine
+        from tests.conftest import PLAYERS_CONFIG
+
+        mdir, _ = fixture_dirs
+        pj = tmp_path / "players.json"
+        pj.write_text(js.dumps(PLAYERS_CONFIG + [
+            {"name": "../../Escaped", "accounts": [{"unoId": "uno-zz"}]},
+        ]))
+        out = tmp_path / "site" / "data"
+        eng = Engine.from_paths(spark, f"{mdir}/*.json", str(pj))
+        with pytest.raises(Exception, match=r"ValueError: player id '\.\./\.\./escaped'"):
+            eng.write_reports(str(out))
+        outside = [
+            p for p in tmp_path.rglob("*")
+            if p.is_file() and p != pj and out not in p.parents
+        ]
+        assert outside == []
 
     def test_distance_board_km_formatting(self, engine, tmp_path):
         import json as js
