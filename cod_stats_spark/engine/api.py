@@ -117,22 +117,25 @@ class Engine:
         return rollups.placement_by_category(self.stats_wz(), self.modes())
 
     def leaderboards(self, k: int = lb.LEADERBOARD_K) -> dict[str, DataFrame]:
-        return lb.all_by_game_boards(self.stats_wz(), self.core(), k)
+        return lb.all_by_game_boards(self.stats_wz(), k)
+
+    def _lifetime_board(self, board: str) -> DataFrame:
+        return lb.board_rows(lb.lifetime_boards(self.stats_wz()), board, lb.LIFETIME_BOARDS[board])
 
     def gulag_streaks(self, wins: bool = True) -> DataFrame:
-        return lb.gulag_streaks(self.stats_wz(), self.core(), wins)
+        return self._lifetime_board("consecutive_gulag_kills" if wins else "consecutive_gulag_deaths")
 
     def most_wins(self) -> DataFrame:
-        return lb.most_wins(self.stats_wz(), self.core())
+        return self._lifetime_board("most_wins")
 
     def most_last_places(self) -> DataFrame:
-        return lb.most_last_places(self.stats_wz(), self.core())
+        return self._lifetime_board("most_lastplaces")
 
     def full_game_stats(self) -> DataFrame:
-        return teams.full_game_stats(self.stats_wz(), self.core())
+        return teams.full_game_stats(self.stats_wz())
 
     def team_breakdowns(self) -> DataFrame:
-        return teams.team_stat_breakdowns(self.stats_wz(), self.core())
+        return teams.team_stat_breakdowns(self.stats_wz())
 
     def recent_matches(self) -> DataFrame:
         return lb.recent_matches(self.full_game_stats())
@@ -210,8 +213,8 @@ class Engine:
         # the pool: the lazy builders are not thread-safe, and two
         # concurrent first-actions would compute the same persisted
         # partitions twice (the semantic_dedup argmin-race lesson).
-        # One count barrier here is one pass over a table ~20
-        # downstream collects then read from cache.
+        # One count barrier here is one pass over the table that every
+        # document action below then reads from cache.
         self.stats_wz().count()
 
         # Every document below reads the SAME materialized stats and
@@ -222,9 +225,9 @@ class Engine:
         # deterministic collect, and the files are written in a fixed order.
         docs: list[tuple[str, object]] = [
             ("leaderboard_bygame.json",
-             lambda: rep.leaderboard_bygame_doc(lb.by_game_boards(self.stats_wz(), self.core()))),
+             lambda: rep.leaderboard_bygame_doc(lb.by_game_boards(self.stats_wz()))),
             ("leaderboard_lifetime.json",
-             lambda: rep.leaderboard_lifetime_doc(lb.lifetime_boards(self.stats_wz(), self.core()))),
+             lambda: rep.leaderboard_lifetime_doc(lb.lifetime_boards(self.stats_wz()))),
             ("team_leaderboards.json",
              lambda: rep.team_leaderboards_doc(self.team_breakdowns())),
             ("recent_matches.json",

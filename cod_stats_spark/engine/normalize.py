@@ -102,9 +102,9 @@ def normalize_matches(bronze: DataFrame, players: DataFrame) -> DataFrame:
         down_all.alias("objectiveBrDownAll"),
         vehicle_all.alias("objectiveDestroyedVehicleAll"),
     )
-    # tracked players only (broadcast semi join) + natural-key dedup
+    # tracked players only (broadcast join on the dim's key) + natural-key dedup
     return out.join(
-        F.broadcast(players.select("player_uno_id")), "player_uno_id", "left_semi"
+        F.broadcast(players.select("player_uno_id")), "player_uno_id"
     ).dropDuplicates(["game_id", "player_uno_id"])
 
 

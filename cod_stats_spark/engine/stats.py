@@ -2,12 +2,17 @@
 parser/parse_matches.sh:223-279): silver ⋈ players (account → display
 player) filtered to tracked warzone modes.
 
+``is_core`` carries the reference's vw_core_players membership onto
+every row: true when the row's display player has any config entry
+with isCore, whichever account played. Boards and team views filter on
+it instead of joining a core-player frame.
+
 Broadcast joins only — the fact side never shuffles here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cod_stats_spark.engine.dims import GAME_MODES
@@ -43,7 +48,11 @@ def stats_wz(valid_games: DataFrame, players: DataFrame) -> DataFrame:
             (F.col("game_mode") == "wz") & F.col("game_mode_sub").isin(tracked_mode_ids())
         )
         .join(
-            F.broadcast(players.select("player_uno_id", "player_id")),
+            F.broadcast(players.select(
+                "player_uno_id",
+                "player_id",
+                F.max("is_core").over(Window.partitionBy("player_id")).alias("is_core"),
+            )),
             "player_uno_id",
             "inner",
         )
@@ -55,6 +64,7 @@ def stats_wz(valid_games: DataFrame, players: DataFrame) -> DataFrame:
             "numberOfPlayers",
             "numberOfTeams",
             *METRIC_COLUMNS,
+            "is_core",
         )
     )
 

@@ -9,15 +9,16 @@ vw_team_stat_breakdowns, parser/parse_matches.sh:379-469).
 - team_stat_breakdowns: per (category, roster) across full-team games:
   games/wins/last places/avg/max, HAVING numGames > 1.
 
-Spark shape: semi-join on core games → one groupBy(game_id) with
-collect_list(struct) → filter full teams → groupBy(category, roster).
+Spark shape: one groupBy(game_id) over all of stats_wz with
+collect_list(struct), keeping the games whose max(is_core) is true
+(:func:`_core_games`) → filter full teams → groupBy(category, roster).
 The reference's json_each re-explosion (J9) is unnecessary — sums are
 computed in the first aggregation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cod_stats_spark.engine.dims import GAME_MODES
@@ -26,32 +27,30 @@ from cod_stats_spark.engine.stats import stats_struct
 FULL_TEAM_SIZES = {"wz_solo": 1, "wz_duos": 2, "wz_trios": 3, "wz_quads": 4}
 
 
-def core_game_rows(stats: DataFrame, core: DataFrame) -> DataFrame:
-    """Every player row of the games where >=1 core player played."""
-    core_games = stats.join(F.broadcast(core), "player_id", "left_semi").select("game_id")
-    return stats.join(core_games.distinct(), "game_id", "left_semi")
-
-
-def full_game_stats(stats: DataFrame, core: DataFrame) -> DataFrame:
-    """Per-game roster + stats array over games with >=1 core player."""
-    per_player = core_game_rows(stats, core).select(
-        "date_key",
-        "game_id",
-        "game_mode_sub",
-        "player_id",
-        stats_struct().alias("pstats"),
+def _core_games(stats: DataFrame, *aggs: Column) -> DataFrame:
+    """``aggs`` per game_id over the games where >=1 core player played."""
+    return (
+        stats.groupBy("game_id")
+        .agg(F.max("is_core").alias("is_core"), *aggs)
+        .filter("is_core")
+        .drop("is_core")
     )
-    return per_player.groupBy("game_id").agg(
+
+
+def full_game_stats(stats: DataFrame) -> DataFrame:
+    """Per-game roster + stats array over games with >=1 core player."""
+    return _core_games(
+        stats,
         F.min("date_key").alias("date_key"),
         F.first("game_mode_sub").alias("game_mode_sub"),
         F.concat_ws(",", F.array_sort(F.collect_list("player_id"))).alias("player_ids"),
         F.array_sort(
-            F.collect_list(F.struct(F.col("player_id"), F.col("pstats").alias("stats")))
+            F.collect_list(F.struct(F.col("player_id"), stats_struct().alias("stats")))
         ).alias("player_stats"),
     )
 
 
-def team_stat_breakdowns(stats: DataFrame, core: DataFrame) -> DataFrame:
+def team_stat_breakdowns(stats: DataFrame) -> DataFrame:
     """Per (category, roster) rollup over FULL-team games, numGames > 1.
 
     Placement is per-team: every tracked member of a full team shares
@@ -64,21 +63,17 @@ def team_stat_breakdowns(stats: DataFrame, core: DataFrame) -> DataFrame:
         *[F.lit(x) for pair in modes for x in pair]
     )[F.col("game_mode_sub")]
 
-    per_game = (
-        core_game_rows(stats, core)
-        .withColumn("category", cat)
-        .groupBy("game_id")
-        .agg(
-            F.min("date_key").alias("date_key"),
-            F.first("category").alias("category"),
-            F.concat_ws(",", F.array_sort(F.collect_list("player_id"))).alias("player_ids"),
-            F.count(F.lit(1)).alias("numPlayers"),
-            F.sum("kills").alias("kills"),
-            F.sum("damageDone").alias("dmg"),
-            F.sum("deaths").alias("deaths"),
-            F.max("teamPlacement").alias("placement"),
-            F.max("numberOfTeams").alias("numberOfTeams"),
-        )
+    per_game = _core_games(
+        stats.withColumn("category", cat),
+        F.min("date_key").alias("date_key"),
+        F.first("category").alias("category"),
+        F.concat_ws(",", F.array_sort(F.collect_list("player_id"))).alias("player_ids"),
+        F.count(F.lit(1)).alias("numPlayers"),
+        F.sum("kills").alias("kills"),
+        F.sum("damageDone").alias("dmg"),
+        F.sum("deaths").alias("deaths"),
+        F.max("teamPlacement").alias("placement"),
+        F.max("numberOfTeams").alias("numberOfTeams"),
     )
     size_map = F.create_map(
         *[F.lit(x) for pair in FULL_TEAM_SIZES.items() for x in pair]

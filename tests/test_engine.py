@@ -190,6 +190,60 @@ class TestLeaderboards:
         )
         assert lp[("alice",)]["value"] == 1  # g003
 
+    def test_api_boards_equal_documents(self, engine, tmp_path):
+        """Every API board has the rows, values, value types and order of
+        its board in the report documents."""
+        import json as js
+
+        engine.write_reports(str(tmp_path))
+        bygame = js.loads((tmp_path / "leaderboard_bygame.json").read_text())
+        lifetime = js.loads((tmp_path / "leaderboard_lifetime.json").read_text())
+        api = {b: df.collect() for b, df in engine.leaderboards().items()}
+        assert set(api) == set(bygame)
+        pairs = [(api[b], bygame[b]) for b in bygame] + [
+            (engine.gulag_streaks(True).collect(), lifetime["consecutive_gulag_kills"]),
+            (engine.gulag_streaks(False).collect(), lifetime["consecutive_gulag_deaths"]),
+            (engine.most_wins().collect(), lifetime["most_wins"]),
+            (engine.most_last_places().collect(), lifetime["most_lastplaces"]),
+        ]
+        for rows, doc in pairs:
+            got = [r.asDict() for r in rows]
+            assert doc and got == doc
+            assert [type(r["value"]) for r in got] == [type(r["value"]) for r in doc]
+        assert all(type(r["value"]) is int for r in bygame["mostkills"])
+        assert all(type(r["value"]) is float for r in bygame["bestkd"])
+
+    def test_core_follows_display_player(self, spark, fixture_dirs, tmp_path):
+        """A display player is core when ANY of its config entries is
+        (the reference's vw_core_players): a second, game-less ``carol``
+        entry with isCore puts carol's uno-c1 games on the boards, and every
+        document equals the one built from a config that marks carol's
+        own entry core."""
+        import json as js
+        from datetime import datetime, timezone
+
+        from cod_stats_spark.engine import Engine
+        from tests.conftest import PLAYERS_CONFIG
+
+        mdir, _ = fixture_dirs
+        second = PLAYERS_CONFIG + [
+            {"name": "Carol", "isCore": True, "accounts": [{"unoId": "uno-c9"}]},
+        ]
+        flagged = [dict(p, isCore=True) if p["name"] == "Carol" else p for p in PLAYERS_CONFIG]
+        docs = []
+        for name, config in (("second", second), ("flagged", flagged)):
+            pj = tmp_path / f"{name}.json"
+            pj.write_text(js.dumps(config))
+            out = tmp_path / name
+            eng = Engine.from_paths(spark, f"{mdir}/*.json", str(pj))
+            eng.write_reports(str(out), now=datetime(2026, 1, 1, tzinfo=timezone.utc))
+            docs.append({
+                str(p.relative_to(out)): p.read_bytes() for p in out.rglob("*") if p.is_file()
+            })
+        assert docs[0] == docs[1]
+        bygame = js.loads(docs[0]["leaderboard_bygame.json"])
+        assert any(r["player_id"] == "carol" for rows in bygame.values() for r in rows)
+
 
 class TestTimeseries:
     def test_rolling_and_cumulative(self, engine):
