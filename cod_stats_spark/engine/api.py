@@ -258,7 +258,8 @@ class Engine:
         892-932). Each family is projected to (player_id, struct(k, v)),
         unioned with the players dim and collected per player, sorted by
         k; collect_list skips the union's nulls, so a player with no games
-        gets four empty arrays. Returns the written paths."""
+        gets four empty arrays. The writer runs one task per core.
+        Returns the written paths."""
         from pyspark.sql import functions as F
 
         from cod_stats_spark.engine.dims import SEASONS
@@ -276,7 +277,11 @@ class Engine:
             union = union.unionByName(
                 df.select("player_id", kv.alias(name)), allowMissingColumns=True
             )
-        grouped = union.groupBy("player_id").agg(*[
+        # an explicit partition count: AQE would coalesce the small
+        # shuffle to one partition, i.e. one writer task for all players;
+        # the aggregate reuses this partitioning, so it is still one shuffle
+        parts = self.spark.sparkContext.defaultParallelism
+        grouped = union.repartition(parts, "player_id").groupBy("player_id").agg(*[
             F.transform(F.array_sort(F.collect_list(name)), lambda x: x["v"]).alias(name)
             for name in families
         ])

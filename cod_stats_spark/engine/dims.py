@@ -8,6 +8,7 @@ and everything downstream is new.
 The tables are JVM-local relations (``LocalRelation``), not
 ``createDataFrame(list)``: that one is a Python RDD, so every plan that
 joins a dimension ran Python worker tasks just to scan ~40 literal rows.
+The players dim (``ingest.read_players_config``) is one too.
 """
 
 from __future__ import annotations
@@ -99,19 +100,26 @@ SESSION_OPEN_END_EPOCH = 9_999_999_999
 
 
 def _sql_literal(v) -> str:
+    if v is None:
+        return "NULL"
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, int):
         return str(v)
-    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    # "$" as a unicode escape: the parser substitutes ${conf} references
+    # in the query text before it reads the literal
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024") + "'"
 
 
 def _inline_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """``rows`` typed by the DDL ``schema`` as a VALUES table: the planner
-    folds it into one LocalRelation, scanned with no Spark job."""
+    folds it into one LocalRelation, scanned with no Spark job. No rows
+    is one row of NULLs filtered out, which folds to an empty one."""
     cols = [c.split() for c in schema.split(",")]
     select = ", ".join(f"CAST(col{i} AS {t}) AS `{n}`" for i, (n, t) in enumerate(cols, 1))
     values = ", ".join("(" + ", ".join(map(_sql_literal, r)) + ")" for r in rows)
+    if not rows:
+        values = "(" + ", ".join(["NULL"] * len(cols)) + ") WHERE false"
     return spark.sql(f"SELECT {select} FROM VALUES {values}")
 
 

@@ -22,6 +22,12 @@ it to ``(game_id, player_uno_id, stats, _corrupt_record)``. One rule,
 and the stream's failure ledger counts them. Incremental loads are a
 left-anti join against the already-ingested key ledger (SURVEY.md
 P6/S3, :func:`incremental_new_rows`), not a filesystem diff.
+
+The players config is parsed once, by the same typed reader, and
+turned into its dimension on the driver (:func:`read_players_config`):
+the dim is a JVM-local relation that every consumer — silver's
+tracked-player join, ``stats_wz``'s display-player window, the
+per-player documents, player search — reads with no file scan.
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from cod_stats_spark.engine.dims import _inline_table
 from cod_stats_spark.engine.schemas import MATCH_SCHEMA, PLAYERS_CONFIG_SCHEMA
 
 FILENAME_RE = r".*/match_([^_]+)_([^_/]+)\.json$"
@@ -117,24 +124,27 @@ def read_matches_from_api(spark: SparkSession, api_root: str, **options) -> Data
     )
 
 
+PLAYERS_SCHEMA = "player_uno_id string, player_id string, is_core boolean"
+
+
 def read_players_config(spark: SparkSession, path: str) -> DataFrame:
     """players.json → (player_uno_id PK, player_id, is_core) dimension.
 
     Mirrors the jq seed (reference parser/parse_matches.sh:546-564):
-    name lowercased to player_id, one row per account unoId, isCore
-    defaulting false; full overwrite per run (rows for removed players
-    disappear because the dim is rebuilt, not mutated).
+    name lowercased to player_id, one row per account unoId (the first
+    entry wins), isCore defaulting false; full overwrite per run (rows
+    for removed players disappear because the dim is rebuilt, not
+    mutated). The typed reader parses the file in one job; the rest
+    runs on the driver, and the dim is a JVM-local relation like the
+    static dims, so its consumers neither re-read nor re-shuffle it.
     """
-    cfg = spark.read.json(path, schema=PLAYERS_CONFIG_SCHEMA, multiLine=True)
-    return (
-        cfg.select(
-            F.lower(F.col("name")).alias("player_id"),
-            F.coalesce(F.col("isCore"), F.lit(False)).alias("is_core"),
-            F.explode(F.col("accounts")).alias("acct"),
-        )
-        .select(F.col("acct.unoId").alias("player_uno_id"), "player_id", "is_core")
-        .dropDuplicates(["player_uno_id"])
-    )
+    dim: dict[str | None, tuple] = {}
+    for entry in spark.read.json(path, schema=PLAYERS_CONFIG_SCHEMA, multiLine=True).collect():
+        player_id = None if entry.name is None else entry.name.lower()
+        for acct in entry.accounts or []:
+            uno = None if acct is None else acct.unoId
+            dim.setdefault(uno, (uno, player_id, bool(entry.isCore)))
+    return _inline_table(spark, list(dim.values()), PLAYERS_SCHEMA)
 
 
 def incremental_new_rows(bronze: DataFrame, ledger: DataFrame | None) -> DataFrame:

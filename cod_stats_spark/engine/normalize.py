@@ -9,8 +9,8 @@ Column semantics preserved exactly:
   wins over gulagDeaths (the API's gulagDeaths is untrustworthy)
 - quality filters (P5): null damageDone/damageTaken dropped, and the
   bugged deaths=0 ∧ damageTaken=0 rows dropped (deaths = coalesced)
-- only tracked players (players dim semi join), dedup on the natural
-  key (game_id, player_uno_id)
+- only tracked players (broadcast join on the players dim), dedup on
+  the natural key (game_id, player_uno_id)
 
 The silver output should be MATERIALIZED by callers (persist() or a
 Parquet write) — the reference's one structural lesson: recomputing

@@ -158,9 +158,11 @@ def placement_by_category(stats: DataFrame, modes: DataFrame) -> DataFrame:
         "wz_trios": "avgPlacementTrios",
         "wz_quads": "avgPlacementQuads",
     }
-    out = pivoted
-    for old, new in renames.items():
-        out = out.withColumn(
-            new, F.coalesce(F.col(old).cast("string"), F.lit("N/A"))
-        ).drop(old)
-    return out
+    return pivoted.select(
+        "player_id",
+        "season_id",
+        *[
+            F.coalesce(F.col(old).cast("string"), F.lit("N/A")).alias(new)
+            for old, new in renames.items()
+        ],
+    )

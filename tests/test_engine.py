@@ -314,6 +314,29 @@ class TestReports:
         ]
         assert outside == []
 
+    def test_player_writer_runs_one_task_per_core(self, spark, engine, tmp_path):
+        """The per-player writer stage (the one collect in api.py) runs
+        min(players, defaultParallelism) tasks, not the single task AQE
+        makes of a small shuffle it may coalesce."""
+        import re
+
+        from cod_stats_spark.engine import api
+
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup())
+        engine.write_reports(str(tmp_path))
+        stages = {
+            s for j in set(tracker.getJobIdsForGroup()) - before
+            for s in tracker.getJobInfo(j).stageIds
+        }
+        writer = re.compile(rf"collect at {re.escape(api.__file__)}:\d+$")
+        tasks = [
+            info.numTasks for info in map(tracker.getStageInfo, stages)
+            if info and writer.match(info.name)
+        ]
+        players = engine.players.select("player_id").distinct().count()
+        assert tasks == [min(players, spark.sparkContext.defaultParallelism)]
+
     def test_distance_board_km_formatting(self, engine, tmp_path):
         import json as js
 
@@ -326,20 +349,30 @@ class TestReports:
 
 
 class TestDims:
-    def test_dims_are_jvm_local_relations(self, spark):
-        """The static dims plan as LocalTableScan: no Python RDD scan, so
-        joining a dim runs no Python worker task."""
+    def test_dims_are_jvm_local_relations(self, spark, engine):
+        """The static dims and the players dim plan as LocalTableScan: no
+        Python RDD scan and no re-read of the players JSON, so joining a
+        dim runs no Python worker task and no file scan."""
         from cod_stats_spark.engine.dims import (
             GAME_MODES, GAME_MODES_SCHEMA, SEASONS, SEASONS_SCHEMA, game_modes_df, seasons_df,
         )
+        from cod_stats_spark.engine.ingest import PLAYERS_SCHEMA
+        from tests.conftest import PLAYERS_CONFIG
 
+        players = [
+            (a["unoId"], p["name"].lower(), p.get("isCore", False))
+            for p in PLAYERS_CONFIG
+            for a in p["accounts"]
+        ]
         for df, rows, ddl in (
             (game_modes_df(spark), GAME_MODES, GAME_MODES_SCHEMA),
             (seasons_df(spark), SEASONS, SEASONS_SCHEMA),
+            (engine.players, players, PLAYERS_SCHEMA),
         ):
             plan = df._jdf.queryExecution().executedPlan().toString()
             assert "LocalTableScan" in plan
             assert "ExistingRDD" not in plan and "Python" not in plan
+            assert "FileScan" not in plan
             assert [tuple(r) for r in df.collect()] == rows
             assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
                 tuple(c.split()) for c in ddl.split(",")

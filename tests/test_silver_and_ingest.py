@@ -110,6 +110,74 @@ class TestListingRewrite:
         assert scan_root(f"{tmp_path}/a/*.json") == (f"{tmp_path}/a", {"pathGlobFilter": "*.json"})
 
 
+def read_players_config_general(spark, path):
+    """Reference dim: the Spark expression ``read_players_config`` used
+    before it moved to the driver (lower, coalesce, explode, then
+    ``dropDuplicates`` on the account id)."""
+    from cod_stats_spark.engine.schemas import PLAYERS_CONFIG_SCHEMA
+
+    cfg = spark.read.json(path, schema=PLAYERS_CONFIG_SCHEMA, multiLine=True)
+    return (
+        cfg.select(
+            F.lower(F.col("name")).alias("player_id"),
+            F.coalesce(F.col("isCore"), F.lit(False)).alias("is_core"),
+            F.explode(F.col("accounts")).alias("acct"),
+        )
+        .select(F.col("acct.unoId").alias("player_uno_id"), "player_id", "is_core")
+        .dropDuplicates(["player_uno_id"])
+    )
+
+
+class TestPlayersDim:
+    """``read_players_config`` builds the dim on the driver: the same
+    rows as the Spark expression it replaced, as a JVM-local relation."""
+
+    CONFIG = [
+        {"name": "ÉMILE", "isCore": True, "accounts": [{"unoId": "u-e1"}, {"unoId": "u-dup"}]},
+        {"name": "ΟΔΥΣΣΕΥΣ", "isCore": False, "accounts": [{"unoId": "u-o"}]},  # final sigma
+        {"name": "İstanbul", "accounts": [{"unoId": "u-i"}]},  # isCore missing
+        {"name": "Straße", "isCore": None, "accounts": [{"unoId": "u-s"}, {"unoId": "u-dup"}]},
+        {"name": "ǅemal", "isCore": True, "accounts": [{"unoId": "u-d"}]},  # titlecase digraph
+        {"name": "ＡＢＣ", "accounts": [{"unoId": "u-f"}]},  # fullwidth
+        {"name": "NoAccounts", "isCore": True, "accounts": []},
+        {"name": "NullAccounts", "isCore": True},
+        {"name": None, "isCore": True, "accounts": [{"unoId": "u-n"}]},
+        {"name": "Quote's \\ ${spark.app.name}", "accounts": [{"unoId": "u-q"}]},
+    ]
+
+    @staticmethod
+    def _dim(spark, tmp_path, config):
+        import json as js
+
+        from cod_stats_spark.engine.ingest import read_players_config
+
+        pj = tmp_path / "players.json"
+        pj.write_text(js.dumps(config))
+        return read_players_config(spark, str(pj)), read_players_config_general(spark, str(pj))
+
+    def test_matches_spark_expression(self, spark, tmp_path):
+        from collections import Counter
+
+        got, want = self._dim(spark, tmp_path, self.CONFIG)
+        assert got.columns == want.columns == ["player_uno_id", "player_id", "is_core"]
+        got_rows = [tuple(r) for r in got.collect()]
+        assert Counter(got_rows) == Counter(tuple(r) for r in want.collect())
+        by_uno = {r[0]: r for r in got_rows}
+        assert by_uno["u-dup"] == ("u-dup", "émile", True)  # the first entry wins
+        assert by_uno["u-o"][1] == "οδυσσευς"
+        assert by_uno["u-s"] == ("u-s", "straße", False)
+        assert by_uno["u-n"] == ("u-n", None, True)
+        assert by_uno["u-q"][1] == "quote's \\ ${spark.app.name}"
+        assert len(got_rows) == 9
+
+    def test_empty_config(self, spark, tmp_path):
+        got, want = self._dim(spark, tmp_path, [])
+        assert got.collect() == want.collect() == []
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ]
+
+
 class TestSaltedJoin:
     def test_equals_plain_join(self, spark):
         from cod_stats_spark.operators.skew import salted_join
