@@ -108,13 +108,13 @@ class Engine:
         return rollups.daily_stats(self.stats_wz())
 
     def by_game(self) -> DataFrame:
-        return rollups.by_game_stats(self.stats_wz(), self.modes())
+        return rollups.by_game_stats(self.stats_wz())
 
     def season_rollup(self) -> DataFrame:
         return rollups.season_rollup(self.stats_wz())
 
     def placement_pivot(self) -> DataFrame:
-        return rollups.placement_by_category(self.stats_wz(), self.modes())
+        return rollups.placement_by_category(self.stats_wz())
 
     def leaderboards(self, k: int = lb.LEADERBOARD_K) -> dict[str, DataFrame]:
         return lb.all_by_game_boards(self.stats_wz(), k)
@@ -153,11 +153,9 @@ class Engine:
         return tsm.seasonal_by_game_timeseries(self.by_game())
 
     def player_season_stats(self) -> DataFrame:
-        """Season rollup ⋈ placement pivot USING (player_id, season_id) —
-        the reference's J6 composite-key join (generate_lookup_data.sh:687-698)."""
-        return self.season_rollup().join(
-            self.placement_pivot(), ["player_id", "season_id"], "left"
-        )
+        """Season rollup plus placement per category, one row per (player,
+        season): one aggregate, no join (``rollups.player_season_stats``)."""
+        return rollups.player_season_stats(self.stats_wz())
 
     # ---- SQL API surface
 

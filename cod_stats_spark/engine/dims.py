@@ -13,7 +13,8 @@ The players dim (``ingest.read_players_config``) is one too.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # (id, mode, category, display_name, is_plunder, is_stimulus, wz_track_stats)
 GAME_MODES = [
@@ -65,6 +66,16 @@ GAME_MODES_SCHEMA = (
     "id string, mode string, category string, display_name string, "
     "is_plunder boolean, is_stimulus boolean, wz_track_stats boolean"
 )
+
+
+def mode_field(field: str) -> Column:
+    """``field`` ("category" or "display_name") of the GAME_MODES row whose
+    id is the ``game_mode_sub`` column: a map lookup, not a join; NULL
+    for an unknown id."""
+    i = {"category": 2, "display_name": 3}[field]
+    lookup = F.create_map(*[F.lit(x) for m in GAME_MODES for x in (m[0], m[i])])
+    return lookup[F.col("game_mode_sub")]
+
 
 # (id, desc, start, end, sort_order) — ISO-8601 UTC strings; 'lifetime'
 # deliberately overlaps every season (SURVEY.md §7.4.11).

@@ -9,44 +9,52 @@ vw_team_stat_breakdowns, parser/parse_matches.sh:379-469).
 - team_stat_breakdowns: per (category, roster) across full-team games:
   games/wins/last places/avg/max, HAVING numGames > 1.
 
-Spark shape: one groupBy(game_id) over all of stats_wz with
-collect_list(struct), keeping the games whose max(is_core) is true
-(:func:`_core_games`) → filter full teams → groupBy(category, roster).
-The reference's json_each re-explosion (J9) is unnecessary — sums are
-computed in the first aggregation.
+Spark shape: one groupBy(game_id) over all of stats_wz, keeping the
+games whose max(is_core) is true (:func:`_games`), serves both views
+(column pruning drops what one does not read) → filter full teams →
+groupBy(category, roster). The reference's json_each re-explosion (J9)
+is unnecessary — sums are computed in the first aggregation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cod_stats_spark.engine.dims import GAME_MODES
+from cod_stats_spark.engine.dims import mode_field
 from cod_stats_spark.engine.stats import stats_struct
 
 FULL_TEAM_SIZES = {"wz_solo": 1, "wz_duos": 2, "wz_trios": 3, "wz_quads": 4}
 
 
-def _core_games(stats: DataFrame, *aggs: Column) -> DataFrame:
-    """``aggs`` per game_id over the games where >=1 core player played."""
+def _games(stats: DataFrame) -> DataFrame:
+    """One row per game where >=1 core player played: date, mode, the
+    canonical roster and stats array, and the per-game team sums."""
     return (
         stats.groupBy("game_id")
-        .agg(F.max("is_core").alias("is_core"), *aggs)
+        .agg(
+            F.max("is_core").alias("is_core"),
+            F.min("date_key").alias("date_key"),
+            F.first("game_mode_sub").alias("game_mode_sub"),
+            F.concat_ws(",", F.array_sort(F.collect_list("player_id"))).alias("player_ids"),
+            F.array_sort(
+                F.collect_list(F.struct(F.col("player_id"), stats_struct().alias("stats")))
+            ).alias("player_stats"),
+            F.count(F.lit(1)).alias("numPlayers"),
+            F.sum("kills").alias("kills"),
+            F.sum("damageDone").alias("dmg"),
+            F.sum("deaths").alias("deaths"),
+            F.max("teamPlacement").alias("placement"),
+            F.max("numberOfTeams").alias("numberOfTeams"),
+        )
         .filter("is_core")
-        .drop("is_core")
     )
 
 
 def full_game_stats(stats: DataFrame) -> DataFrame:
     """Per-game roster + stats array over games with >=1 core player."""
-    return _core_games(
-        stats,
-        F.min("date_key").alias("date_key"),
-        F.first("game_mode_sub").alias("game_mode_sub"),
-        F.concat_ws(",", F.array_sort(F.collect_list("player_id"))).alias("player_ids"),
-        F.array_sort(
-            F.collect_list(F.struct(F.col("player_id"), stats_struct().alias("stats")))
-        ).alias("player_stats"),
+    return _games(stats).select(
+        "game_id", "date_key", "game_mode_sub", "player_ids", "player_stats"
     )
 
 
@@ -58,23 +66,7 @@ def team_stat_breakdowns(stats: DataFrame) -> DataFrame:
     reference reads an arbitrary member's value via SQLite bare-column
     semantics — parse_matches.sh:418).
     """
-    modes = [(m[0], m[2]) for m in GAME_MODES]
-    cat = F.create_map(
-        *[F.lit(x) for pair in modes for x in pair]
-    )[F.col("game_mode_sub")]
-
-    per_game = _core_games(
-        stats.withColumn("category", cat),
-        F.min("date_key").alias("date_key"),
-        F.first("category").alias("category"),
-        F.concat_ws(",", F.array_sort(F.collect_list("player_id"))).alias("player_ids"),
-        F.count(F.lit(1)).alias("numPlayers"),
-        F.sum("kills").alias("kills"),
-        F.sum("damageDone").alias("dmg"),
-        F.sum("deaths").alias("deaths"),
-        F.max("teamPlacement").alias("placement"),
-        F.max("numberOfTeams").alias("numberOfTeams"),
-    )
+    per_game = _games(stats).withColumn("category", mode_field("category"))
     size_map = F.create_map(
         *[F.lit(x) for pair in FULL_TEAM_SIZES.items() for x in pair]
     )

@@ -560,6 +560,171 @@ class TestSeasonAssign:
         assert len(got) == 7
 
 
+def placement_by_category_general(stats):
+    """Reference placement pivot: season fan-out ⋈ game-modes dim, one
+    aggregate per (player, season, category), pivoted to columns."""
+    from pyspark.sql import functions as F
+
+    from cod_stats_spark.engine import rollups
+    from cod_stats_spark.engine.dims import game_modes_df
+
+    modes = game_modes_df(stats.sparkSession)
+    cats = ["wz_solo", "wz_duos", "wz_trios", "wz_quads"]
+    per_cat = (
+        rollups.season_assign(stats)
+        .join(F.broadcast(modes.select(F.col("id").alias("game_mode_sub"), "category")),
+              "game_mode_sub")
+        .filter(F.col("category").isin(cats))
+        .groupBy("player_id", "season_id", "category")
+        .agg(F.round(
+            F.lit(100) * F.sum("teamPlacement") / F.sum("numberOfTeams").cast("double"), 2,
+        ).alias("avgPlacement"))
+    )
+    pivoted = per_cat.groupBy("player_id", "season_id").pivot("category", cats).agg(
+        F.first("avgPlacement")
+    )
+    names = ["avgPlacementSolo", "avgPlacementDuos", "avgPlacementTrios", "avgPlacementQuads"]
+    return pivoted.select("player_id", "season_id", *[
+        F.coalesce(F.col(c).cast("string"), F.lit("N/A")).alias(n) for c, n in zip(cats, names)
+    ])
+
+
+def player_season_stats_general(stats):
+    """Reference season stats: the season rollup LEFT JOIN the placement
+    pivot USING (player_id, season_id), the reference's J6 composite-key
+    join (generate_lookup_data.sh:687-698)."""
+    from pyspark.sql import functions as F
+
+    from cod_stats_spark.engine import metrics as M, rollups
+
+    agg = rollups.season_assign(stats).groupBy(
+        "player_id", "season_id", "descr", "sort_order"
+    ).agg(
+        F.count(F.lit(1)).alias("matches"),
+        F.sum("damageDone").alias("damage"),
+        F.sum("kills").alias("kills"),
+        F.sum("deaths").alias("deaths"),
+        F.sum("gulagKills").alias("gulagWins"),
+        F.sum("gulagDeaths").alias("gulagLosses"),
+    )
+    rollup = agg.select(
+        "*",
+        F.round(M.kd_sql(F.col("kills"), F.col("deaths")), 2).alias("kdRatio"),
+        F.round(F.col("kills") / F.col("matches").cast("double"), 2).alias("killsPerGame"),
+        F.round(F.col("damage") / F.col("matches").cast("double"), 2).alias("damagePerGame"),
+        M.damage_per_kill_int(F.col("damage"), F.col("kills")).alias("damagePerKill"),
+        M.gulag_win_pct_int(F.col("gulagWins"), F.col("gulagLosses")).alias("gulagWinPct"),
+    )
+    return rollup.join(placement_by_category_general(stats), ["player_id", "season_id"], "left")
+
+
+def _plan_node_names(plan):
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_node_names(kids.apply(i))
+    ]
+
+
+class TestPlayerSeasonStats:
+    """``rollups.player_season_stats`` (one conditional aggregate)
+    against the rollup ⋈ pivot reference: whole rows, with multiplicity,
+    in the same column order."""
+
+    @staticmethod
+    def _same_as_general(df):
+        from collections import Counter
+
+        from cod_stats_spark.engine import rollups
+
+        got = rollups.player_season_stats(df)
+        want = player_season_stats_general(df)
+        assert got.columns == want.columns
+        rows = got.collect()
+        assert Counter(map(tuple, rows)) == Counter(map(tuple, want.collect()))
+        return rows
+
+    def test_matches_general_on_fixture(self, engine):
+        assert self._same_as_general(engine.stats_wz())
+
+    def test_placement_pivot_matches_general(self, engine):
+        from collections import Counter
+
+        got = engine.placement_pivot()
+        want = placement_by_category_general(engine.stats_wz())
+        assert got.columns == want.columns
+        assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
+
+    def test_null_versus_na(self, spark):
+        """No game in any of the four categories → four NULLs (the LEFT
+        JOIN finds no pivot row); a category with no games, or with a
+        numberOfTeams sum of 0, → 'N/A'."""
+        rows = [
+            # season03: Mini Royale only
+            ("2020-05-01T10:00:00Z", "br_mini_miniroyale", 3, 40),
+            ("2020-05-02T10:00:00Z", "br_mini_miniroyale", 5, 40),
+            # season04: solo only
+            ("2020-07-01T10:00:00Z", "br_brsolo", 10, 100),
+            ("2020-07-02T10:00:00Z", "br_87", 30, 150),
+            # season05: duos with numberOfTeams 0, trios normal
+            ("2020-09-01T10:00:00Z", "br_brduos", 4, 0),
+            ("2020-09-02T10:00:00Z", "br_brtrios", 7, 50),
+        ]
+        df = spark.createDataFrame(
+            [("p", d, m, tp, nt, 100, 2, 1, 1, 0) for d, m, tp, nt in rows],
+            "player_id string, date_key string, game_mode_sub string, teamPlacement long, "
+            "numberOfTeams long, damageDone long, kills long, deaths long, "
+            "gulagKills long, gulagDeaths long",
+        )
+        cols = ["avgPlacementSolo", "avgPlacementDuos", "avgPlacementTrios", "avgPlacementQuads"]
+        placements = {r.season_id: tuple(r[c] for c in cols) for r in self._same_as_general(df)}
+        assert placements == {
+            "season03": (None, None, None, None),
+            "season04": ("16.0", "N/A", "N/A", "N/A"),
+            "season05": ("N/A", "N/A", "14.0", "N/A"),
+            "lifetime": ("16.0", "N/A", "14.0", "N/A"),
+        }
+
+    def test_one_aggregate_no_join(self, engine):
+        """One season fan-out and no join: the placement columns are
+        conditional sums in the rollup's own aggregate."""
+        plan = engine.player_season_stats()._jdf.queryExecution().optimizedPlan()
+        names = _plan_node_names(plan)
+        assert "Join" not in names
+        assert names.count("Generate") == 1
+        assert names.count("Aggregate") == 1
+
+
+def by_game_mode_general(stats):
+    """Reference display mode: a LEFT JOIN onto the game-modes dim,
+    'Unknown &lt;id&gt;' where no dim row matches."""
+    from pyspark.sql import functions as F
+
+    from cod_stats_spark.engine.dims import game_modes_df
+
+    modes = game_modes_df(stats.sparkSession)
+    joined = stats.join(F.broadcast(modes), stats["game_mode_sub"] == modes["id"], "left")
+    return joined.select("game_id", "player_id", F.coalesce(
+        F.col("display_name"), F.concat(F.lit("Unknown &lt;"), F.col("game_mode_sub"), F.lit("&gt;"))
+    ).alias("mode"))
+
+
+class TestByGameMode:
+    def test_mode_lookup_matches_join(self, engine):
+        """``by_game_stats`` looks the display name up in a map, not a
+        join: the same modes as the join reference, fallback included."""
+        from collections import Counter
+
+        from pyspark.sql import functions as F
+
+        from cod_stats_spark.engine import rollups
+
+        stats = engine.stats_wz()
+        df = stats.unionByName(stats.limit(1).withColumn("game_mode_sub", F.lit("br_mystery")))
+        got = rollups.by_game_stats(df).select("game_id", "player_id", "mode").collect()
+        assert Counter(map(tuple, got)) == Counter(map(tuple, by_game_mode_general(df).collect()))
+        assert "Unknown &lt;br_mystery&gt;" in {r.mode for r in got}
+
+
 class TestOperatorFence:
     def test_engine_imports_only_pipeline_operators(self):
         """The pipeline uses four operator modules; the rest of
