@@ -4,14 +4,15 @@
     eng.stats_wz()                   # gold fact DataFrame
     eng.daily() / eng.by_game()      # rollups
     eng.sessions() / eng.session_stats()
-    eng.leaderboards()               # dict of top-10 boards
+    eng.leaderboards()               # dict of the 12 top-10 by-game boards
     eng.team_breakdowns()
     eng.daily_timeseries()
     eng.write_reports(out_dir)       # the static-site JSON documents
 
 Materialization: the silver fact table is persisted on first access
 (the reference's drop-and-rebuild materialized table, SURVEY.md §4) —
-every downstream view reuses it instead of re-parsing JSON.
+every downstream view reuses it instead of re-parsing JSON. So is the
+ranked board table, which the board documents and every API board read.
 """
 
 from __future__ import annotations
@@ -54,6 +55,7 @@ class Engine:
         self.players = players
         self._silver: DataFrame | None = None
         self._stats: DataFrame | None = None
+        self._boards: DataFrame | None = None
 
     @classmethod
     def from_paths(cls, spark: SparkSession, matches_path: str, players_json: str) -> "Engine":
@@ -116,20 +118,28 @@ class Engine:
     def placement_pivot(self) -> DataFrame:
         return rollups.placement_by_category(self.stats_wz())
 
-    def leaderboards(self, k: int = lb.LEADERBOARD_K) -> dict[str, DataFrame]:
-        return lb.all_by_game_boards(self.stats_wz(), k)
+    def boards(self) -> DataFrame:
+        """Every leaderboard, ranked in one table (``leaderboards.boards``),
+        persisted on first access: the board documents and every API
+        board read it."""
+        if self._boards is None:
+            self._boards = lb.boards(self.stats_wz()).persist()
+        return self._boards
 
-    def _lifetime_board(self, board: str) -> DataFrame:
-        return lb.board_rows(lb.lifetime_boards(self.stats_wz()), board, lb.LIFETIME_BOARDS[board])
+    def leaderboards(self) -> dict[str, DataFrame]:
+        """The 12 by-game boards: board → (date_key, game_mode_sub,
+        game_id, player_id, value) in rank order."""
+        return {b: lb.board_rows(self.boards(), b) for b in lb.BY_GAME_METRICS}
 
     def gulag_streaks(self, wins: bool = True) -> DataFrame:
-        return self._lifetime_board("consecutive_gulag_kills" if wins else "consecutive_gulag_deaths")
+        board = "consecutive_gulag_kills" if wins else "consecutive_gulag_deaths"
+        return lb.board_rows(self.boards(), board)
 
     def most_wins(self) -> DataFrame:
-        return self._lifetime_board("most_wins")
+        return lb.board_rows(self.boards(), "most_wins")
 
     def most_last_places(self) -> DataFrame:
-        return self._lifetime_board("most_lastplaces")
+        return lb.board_rows(self.boards(), "most_lastplaces")
 
     def full_game_stats(self) -> DataFrame:
         return teams.full_game_stats(self.stats_wz())
@@ -221,28 +231,24 @@ class Engine:
         # sequential because driver code calls them sequentially).
         # Results are byte-identical: each payload is built from its own
         # deterministic collect, and the files are written in a fixed order.
-        docs: list[tuple[str, object]] = [
-            ("leaderboard_bygame.json",
-             lambda: rep.leaderboard_bygame_doc(lb.by_game_boards(self.stats_wz()))),
-            ("leaderboard_lifetime.json",
-             lambda: rep.leaderboard_lifetime_doc(lb.lifetime_boards(self.stats_wz()))),
-            ("team_leaderboards.json",
-             lambda: rep.team_leaderboards_doc(self.team_breakdowns())),
-            ("recent_matches.json",
-             lambda: rep.recent_matches_doc(self.recent_matches())),
-            ("recent_sessions.json",
-             lambda: rep.sessions_doc(self.recent_sessions())),
-            ("seasons.json", lambda: rep.seasons_doc()),
-            ("meta.json", lambda: rep.meta_doc(now)),
+        # Each entry yields {file name: payload}; one collect of the board
+        # table yields both leaderboard documents.
+        docs = [
+            lambda: rep.leaderboard_docs(self.boards()),
+            lambda: {"team_leaderboards.json": rep.team_leaderboards_doc(self.team_breakdowns())},
+            lambda: {"recent_matches.json": rep.recent_matches_doc(self.recent_matches())},
+            lambda: {"recent_sessions.json": rep.sessions_doc(self.recent_sessions())},
+            lambda: {"seasons.json": rep.seasons_doc(), "meta.json": rep.meta_doc(now)},
         ]
         written = []
         with ThreadPoolExecutor(max_workers=4) as pool:
             player_docs = pool.submit(self._write_player_docs, out_dir)
-            futures = [(rel, pool.submit(fn)) for rel, fn in docs]
-            for rel, fut in futures:
-                path = os.path.join(out_dir, rel)
-                rep.write_json(path, fut.result())
-                written.append(path)
+            futures = [pool.submit(fn) for fn in docs]
+            for fut in futures:
+                for rel, payload in fut.result().items():
+                    path = os.path.join(out_dir, rel)
+                    rep.write_json(path, payload)
+                    written.append(path)
             written += player_docs.result()
         return written
 

@@ -10,11 +10,11 @@ Every board reads the core rows only: ``stats_wz``'s ``is_core`` column
 boards get a deterministic tiebreak (metric DESC, date_key, game_id,
 player_id) — SQL LIMIT alone cuts ties arbitrarily (SURVEY.md §7.4.8).
 
-Each board family has one implementation: the 12 by-game boards and the
-4 lifetime boards are each a tagged union ranked by one window
-(``row_number`` per board). The report documents read a family with one
-collect; the API's per-board frames are rank-ordered filters of the same
-union (:func:`board_rows`).
+The 16 boards are one table (:func:`boards`): a tagged union of the
+by-game, streak and count rows ranked by one window (``row_number`` per
+board). The report documents read it with one collect; the API's
+per-board frames are rank-ordered filters of it (:func:`board_rows`).
+Both read a board's value from the field ``BOARDS`` names.
 """
 
 from __future__ import annotations
@@ -45,21 +45,21 @@ BY_GAME_METRICS = {
 }
 
 
-# deterministic lifetime order; a count board has no date_key, so its
-# rows (nulls tie) fall back to (value DESC, player_id)
-STREAK_ORDER = [("value", True), ("date_key", False), ("player_id", False)]
-BY_GAME_TIEBREAK = [("date_key", False), ("game_id", False), ("player_id", False)]
-
 BY_GAME_COLUMNS = ["date_key", "game_mode_sub", "game_id", "player_id"]
-# lifetime board key (report document) → its columns
-LIFETIME_BOARDS = {
-    "consecutive_gulag_kills": ["player_id", "date_key", "until_date_key", "value"],
-    "consecutive_gulag_deaths": ["player_id", "date_key", "until_date_key", "value"],
-    "most_wins": ["player_id", "value"],
-    "most_lastplaces": ["player_id", "value"],
+STREAK_COLUMNS = ["player_id", "date_key", "until_date_key"]
+# board → (its columns in the documents and the API, the field of
+# :func:`boards` its ``value`` is read from: ``lv`` long, ``dv`` double,
+# ``sv`` the display string); a board's rows are its columns, then value
+BOARDS = {
+    **{b: (BY_GAME_COLUMNS, "lv") for b in BY_GAME_METRICS},
+    "bestkd": (BY_GAME_COLUMNS, "dv"),
+    "highestscore": (BY_GAME_COLUMNS, "dv"),
+    "longestdistance": (BY_GAME_COLUMNS, "sv"),
+    "consecutive_gulag_kills": (STREAK_COLUMNS, "lv"),
+    "consecutive_gulag_deaths": (STREAK_COLUMNS, "lv"),
+    "most_wins": (["player_id"], "lv"),
+    "most_lastplaces": (["player_id"], "lv"),
 }
-
-_INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
 
 def _per_board(df: DataFrame, keep: list[str], boards: dict[str, dict[str, Column]]) -> DataFrame:
@@ -80,64 +80,14 @@ def _km(meters: Column) -> Column:
     return F.concat((meters / 1000).cast("int").cast("string"), F.lit(" km"))
 
 
-def board_rows(ranked: DataFrame, board: str, columns: list) -> DataFrame:
-    """One board of a ranked union (:func:`by_game_boards`,
-    :func:`lifetime_boards`) in rank order, as ``columns``."""
-    return ranked.filter(F.col("board") == board).orderBy("rank").select(*columns)
-
-
-def _value_fields(stats: DataFrame) -> dict[str, str]:
-    """Board → the :func:`by_game_boards` field it ranks on: ``lv`` for
-    an integral metric, ``dv`` for a fractional one."""
-    integral = {c for c, t in stats.dtypes if t in _INTEGRAL}
-    return {b: "lv" if c in integral else "dv" for b, c in BY_GAME_METRICS.items()}
-
-
-def by_game_boards(stats: DataFrame, k: int = LEADERBOARD_K) -> DataFrame:
-    """All 12 by-game boards (top-k single-game values of each
-    ``BY_GAME_METRICS`` column) from ONE window pass: each core row is
-    stacked once per board as (board, lv, dv) and ranked within its board
-    → (board, rank, BY_GAME_COLUMNS, lv, dv, sv).
-
-    A metric is integral (``lv``, long) or fractional (``dv``, double),
-    so a board's rows populate one field and rank on it exactly (the
-    other field is null on every row of the board); long values stay
-    ints in the documents. ``sv`` is the longestdistance display string."""
-    types = {"lv": "long", "dv": "double"}
-    fields = {
-        b: {f: (F.col(BY_GAME_METRICS[b]) if f == rank_f else F.lit(None)).cast(t)
-            for f, t in types.items()}
-        for b, rank_f in _value_fields(stats).items()
-    }
-    ranked = top_k_per_group(
-        _per_board(stats.filter("is_core"), BY_GAME_COLUMNS, fields),
-        ["board"], [("lv", True), ("dv", True), *BY_GAME_TIEBREAK], k,
-        rank_col="rank", keep_rank=True,
-    )
-    return ranked.withColumn("sv", F.when(F.col("board") == "longestdistance", _km(F.col("dv"))))
-
-
-def all_by_game_boards(stats: DataFrame, k: int = LEADERBOARD_K) -> dict[str, DataFrame]:
-    """Board → its rows of :func:`by_game_boards` in rank order:
-    (BY_GAME_COLUMNS, value), value the board's own field."""
-    ranked = by_game_boards(stats, k)
-    fields = {**_value_fields(stats), "longestdistance": "sv"}
-    return {
-        b: board_rows(ranked, b, [*BY_GAME_COLUMNS, F.col(f).alias("value")])
-        for b, f in fields.items()
-    }
-
-
-def _streaks(stats: DataFrame, flags: dict[str, str]) -> DataFrame:
+def _streaks(core: DataFrame, flags: dict[str, str]) -> DataFrame:
     """Every consecutive gulag streak per board (board → 0/1 flag column:
     gulagKills for wins, gulagDeaths for losses), all boards in one
-    window pass: (board, player_id, date_key, until_date_key, value).
+    window pass: (board, player_id, date_key, until_date_key, lv).
 
     Reference filter: only rows where a gulag happened (gulagKills=1 OR
     gulagDeaths=1); runs of the flag within that subsequence."""
-    base = stats.filter(
-        F.col("is_core") & ((F.col("gulagKills") == 1) | (F.col("gulagDeaths") == 1))
-    )
+    base = core.filter((F.col("gulagKills") == 1) | (F.col("gulagDeaths") == 1))
     stacked = _per_board(base, ["*"], {b: {"flag": F.col(c)} for b, c in flags.items()})
     runs = run_lengths(stacked, ["board", "player_id"], ["date_key", "game_id"], "flag")
     return (
@@ -146,39 +96,78 @@ def _streaks(stats: DataFrame, flags: dict[str, str]) -> DataFrame:
         .agg(
             F.min("date_key").alias("date_key"),
             F.max("date_key").alias("until_date_key"),
-            F.count(F.lit(1)).alias("value"),
+            F.count(F.lit(1)).alias("lv"),
         )
         .drop("run_grp")
     )
 
 
-def _counts(stats: DataFrame, predicates: dict[str, Column]) -> DataFrame:
+def _counts(core: DataFrame, predicates: dict[str, Column]) -> DataFrame:
     """Per-(board, player) count of games matching the board's predicate
     (most wins teamPlacement=1; most last places
-    teamPlacement=numberOfTeams): (board, player_id, value)."""
+    teamPlacement=numberOfTeams): (board, player_id, lv)."""
     flags = {b: {"flag": p} for b, p in predicates.items()}
     return (
-        _per_board(stats.filter("is_core"), ["*"], flags)
+        _per_board(core, ["*"], flags)
         .filter(F.col("flag"))
         .groupBy("board", "player_id")
-        .agg(F.count(F.lit(1)).alias("value"))
+        .agg(F.count(F.lit(1)).alias("lv"))
     )
 
 
-def lifetime_boards(stats: DataFrame, k: int = LEADERBOARD_K) -> DataFrame:
-    """The four lifetime boards (keys of ``LIFETIME_BOARDS``) ranked in
-    one window: (board, rank, player_id, date_key, until_date_key,
-    value), the dates null on the count boards."""
-    streaks = _streaks(stats, {
+def boards(stats: DataFrame) -> DataFrame:
+    """All 16 boards (keys of ``BOARDS``) ranked by ONE window → (board,
+    rank, BY_GAME_COLUMNS, until_date_key, lv, dv, sv), the top
+    ``LEADERBOARD_K`` rows of each board.
+
+    The union of three row sets, each tagged with its board:
+    - by-game: each core row stacked once per ``BY_GAME_METRICS`` board,
+      its metric in ``lv`` (long) or ``dv`` (double), the other null, so
+      a board ranks on its own field exactly and long values stay ints;
+    - streaks: (player, date_key, until_date_key, lv = length);
+    - counts: (player, lv = games).
+
+    One order ranks them all: (lv DESC, dv DESC, date_key, game_id,
+    player_id). A lifetime row has null ``dv`` and ``game_id``, so it
+    ranks by (lv DESC, date_key, player_id); a count row has no date_key
+    either. ``sv`` is the longestdistance display string."""
+    core = stats.filter("is_core")
+    fields = {}
+    for b, c in BY_GAME_METRICS.items():
+        integral = BOARDS[b][1] == "lv"  # longestdistance ranks on dv, shows sv
+        fields[b] = {
+            "lv": (F.col(c) if integral else F.lit(None)).cast("long"),
+            "dv": (F.lit(None) if integral else F.col(c)).cast("double"),
+        }
+    streaks = _streaks(core, {
         "consecutive_gulag_kills": "gulagKills",
         "consecutive_gulag_deaths": "gulagDeaths",
     })
-    counts = _counts(stats, {
+    counts = _counts(core, {
         "most_wins": F.col("teamPlacement") == 1,
         "most_lastplaces": F.col("teamPlacement") == F.col("numberOfTeams"),
     })
-    union = streaks.unionByName(counts, allowMissingColumns=True)
-    return top_k_per_group(union, ["board"], STREAK_ORDER, k, rank_col="rank", keep_rank=True)
+    union = (
+        _per_board(core, BY_GAME_COLUMNS, fields)
+        .unionByName(streaks, allowMissingColumns=True)
+        .unionByName(counts, allowMissingColumns=True)
+    )
+    order = [("lv", True), ("dv", True), ("date_key", False), ("game_id", False),
+             ("player_id", False)]
+    ranked = top_k_per_group(union, ["board"], order, LEADERBOARD_K,
+                             rank_col="rank", keep_rank=True)
+    return ranked.withColumn("sv", F.when(F.col("board") == "longestdistance", _km(F.col("dv"))))
+
+
+def board_rows(table: DataFrame, board: str) -> DataFrame:
+    """One board of :func:`boards` in rank order: its ``BOARDS`` columns,
+    then its value field as ``value``. The limit makes the sort a
+    per-partition top-k (TakeOrderedAndProject), not a range shuffle."""
+    columns, field = BOARDS[board]
+    return (
+        table.filter(F.col("board") == board).orderBy("rank")
+        .select(*columns, F.col(field).alias("value")).limit(LEADERBOARD_K)
+    )
 
 
 def recent_matches(full_games: DataFrame, k: int = RECENT_MATCHES_K) -> DataFrame:

@@ -4,9 +4,11 @@ the S9/S10 sink family).
 The top-k documents here (boards, recents, dims) are SMALL results —
 the heavy work happened in distributed aggregations; they are collected
 to the driver and written as single JSON files, mirroring the
-reference's static-file serving layer. The per-player documents are not
-collected: ``Engine.write_reports`` writes them from the executors, one
-grouped pass for every player's whole file set.
+reference's static-file serving layer. Both leaderboard documents come
+from one collect of the one board table (``leaderboards.boards``). The
+per-player documents are not collected: ``Engine.write_reports`` writes
+them from the executors, one grouped pass for every player's whole file
+set.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 
 from cod_stats_spark.engine.dims import SEASONS
-from cod_stats_spark.engine.leaderboards import BY_GAME_COLUMNS, BY_GAME_METRICS, LIFETIME_BOARDS
+from cod_stats_spark.engine.leaderboards import BOARDS, BY_GAME_METRICS
 
 
 def _rows(df: DataFrame) -> list[dict]:
@@ -31,32 +33,21 @@ def write_json(path: str, payload) -> None:
         json.dump(payload, f, separators=(",", ":"))
 
 
-def _boards(ranked: DataFrame, columns: dict[str, list[str]]) -> dict:
-    """One collect of a tagged, ranked board union → {board: [rows in
-    rank order]}, each row restricted to its board's columns; every board
-    key is present, empty boards as []."""
-    doc: dict[str, list] = {board: [] for board in columns}
-    for r in sorted(_rows(ranked), key=lambda r: (r["board"], r["rank"])):
-        doc[r["board"]].append({c: r[c] for c in columns[r["board"]]})
-    return doc
-
-
-def leaderboard_bygame_doc(ranked: DataFrame) -> dict:
-    """{board_key: [ {date_key, game_mode_sub, game_id, player_id, value} ]}
-    from ``leaderboards.by_game_boards``; ``value`` is whichever of the
-    display string, long or double field the board populates."""
-    doc = _boards(ranked, {b: [*BY_GAME_COLUMNS, "sv", "lv", "dv"] for b in BY_GAME_METRICS})
-    for rows in doc.values():
-        for r in rows:
-            sv, lv, dv = r.pop("sv"), r.pop("lv"), r.pop("dv")
-            r["value"] = sv if sv is not None else lv if lv is not None else dv
-    return doc
-
-
-def leaderboard_lifetime_doc(ranked: DataFrame) -> dict:
-    """{consecutive_gulag_kills, consecutive_gulag_deaths, most_wins,
-    most_lastplaces} from ``leaderboards.lifetime_boards``."""
-    return _boards(ranked, LIFETIME_BOARDS)
+def leaderboard_docs(table: DataFrame) -> dict[str, dict]:
+    """One collect of ``leaderboards.boards`` → the two leaderboard
+    documents, {file name: {board: [rows in rank order]}}: the 12 by-game
+    boards in ``leaderboard_bygame.json``, the 4 lifetime boards in
+    ``leaderboard_lifetime.json``. A row is its board's ``BOARDS``
+    columns, then ``value`` from the board's value field; every board
+    key is present, an empty board as []."""
+    rows: dict[str, list] = {board: [] for board in BOARDS}
+    for r in sorted(_rows(table), key=lambda r: (r["board"], r["rank"])):
+        columns, field = BOARDS[r["board"]]
+        rows[r["board"]].append({**{c: r[c] for c in columns}, "value": r[field]})
+    return {
+        "leaderboard_bygame.json": {b: rows[b] for b in BY_GAME_METRICS},
+        "leaderboard_lifetime.json": {b: rows[b] for b in BOARDS if b not in BY_GAME_METRICS},
+    }
 
 
 def team_leaderboards_doc(breakdowns: DataFrame) -> dict:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from cod_stats_spark.engine.dims import SESSION_DELTA_SECONDS, SESSION_OPEN_END_EPOCH
 from cod_stats_spark.engine.normalize import ISO, epoch_to_iso
 from cod_stats_spark.operators.sessionize import sessionize
+from cod_stats_spark.operators.topk import top_k_per_group
 
 
 def sessionized_games(stats: DataFrame) -> DataFrame:
@@ -77,9 +78,4 @@ def session_stats(stats: DataFrame) -> DataFrame:
 def latest_session_per_player(session_stats_df: DataFrame) -> DataFrame:
     """Top-1 session per player by session_number (reference
     generate_lookup_data.sh:555-561)."""
-    w = Window.partitionBy("player_id").orderBy(F.col("session_number").desc())
-    return (
-        session_stats_df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return top_k_per_group(session_stats_df, ["player_id"], [("session_number", True)], 1)

@@ -4,11 +4,25 @@ team breakdowns, rollups, leaderboards, reports."""
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import T0
 
 
 def by_key(rows, *keys):
     return {tuple(r[k] for k in keys): r for r in rows}
+
+
+@pytest.fixture(scope="module")
+def reports(engine, tmp_path_factory):
+    """One ``write_reports`` run on the session engine, with the goldens'
+    fixed ``now``, shared by the tests that only read its output:
+    (out_dir, the returned paths)."""
+    from datetime import datetime, timezone
+
+    out = tmp_path_factory.mktemp("reports")
+    files = engine.write_reports(str(out), now=datetime(2026, 1, 1, tzinfo=timezone.utc))
+    return out, files
 
 
 class TestNormalization:
@@ -164,9 +178,77 @@ class TestRollups:
         assert any(r["mode"] == "Duos" for r in rows)
 
 
+def boards_general(stats):
+    """Reference for ``leaderboards.boards``: the two windows it replaced.
+    The by-game boards are ranked on (lv DESC, dv DESC, date_key, game_id,
+    player_id), each metric in the field its column type picks; the
+    streaks ∪ counts on (length or count DESC, date_key, player_id)."""
+    from pyspark.sql import functions as F
+
+    from cod_stats_spark.engine import leaderboards as lb
+    from cod_stats_spark.operators.topk import top_k_per_group
+
+    core = stats.filter("is_core")
+    integral = {c for c, t in stats.dtypes if t in {"tinyint", "smallint", "int", "bigint"}}
+    fields = {
+        b: {"lv": (F.col(c) if c in integral else F.lit(None)).cast("long"),
+            "dv": (F.lit(None) if c in integral else F.col(c)).cast("double")}
+        for b, c in lb.BY_GAME_METRICS.items()
+    }
+    by_game = top_k_per_group(
+        lb._per_board(core, lb.BY_GAME_COLUMNS, fields), ["board"],
+        [("lv", True), ("dv", True), ("date_key", False), ("game_id", False), ("player_id", False)],
+        lb.LEADERBOARD_K, rank_col="rank", keep_rank=True,
+    ).withColumn("sv", F.when(F.col("board") == "longestdistance", lb._km(F.col("dv"))))
+    streaks = lb._streaks(core, {
+        "consecutive_gulag_kills": "gulagKills", "consecutive_gulag_deaths": "gulagDeaths",
+    })
+    counts = lb._counts(core, {
+        "most_wins": F.col("teamPlacement") == 1,
+        "most_lastplaces": F.col("teamPlacement") == F.col("numberOfTeams"),
+    })
+    lifetime = top_k_per_group(
+        streaks.unionByName(counts, allowMissingColumns=True), ["board"],
+        [("lv", True), ("date_key", False), ("player_id", False)],
+        lb.LEADERBOARD_K, rank_col="rank", keep_rank=True,
+    )
+    return by_game.unionByName(lifetime, allowMissingColumns=True)
+
+
+def tied_stats(spark):
+    """A ``stats_wz``-shaped frame full of ties: four core players (and one
+    non-core) play six games each on the same six dates, ``a``/``b`` in
+    shared games ``g<j>`` and ``c``/``d`` in ``h<j>``; every metric takes
+    one or two values, so more than ``LEADERBOARD_K`` rows tie on most
+    boards. Gulag runs (W kill, L death, - none): ``a`` WWLWW-, ``b``
+    WW-LL-, ``c`` LWWLWW, ``d`` none, ``e`` WWWWWW: equal streak lengths
+    from different start dates and from the same one. ``a``, ``b`` and
+    ``c`` win two games each, ``d`` one; ``a`` and ``c`` finish last once."""
+    gulag = {"a": "WWLWW-", "b": "WW-LL-", "c": "LWWLWW", "d": "------", "e": "WWWWWW"}
+    wins = {"a": (0, 3), "b": (1, 4), "c": (0, 5), "d": (2,), "e": (0, 1, 2)}
+    last = {"a": (5,), "c": (1,)}
+    rows = []
+    for p, runs in gulag.items():
+        for j, g in enumerate(runs):
+            placement = 1 if j in wins[p] else 50 if j in last.get(p, ()) else 7
+            rows.append((
+                p != "e", p, f"2020-09-{1 + j:02d}T10:00:00Z", f"{'g' if p in 'abe' else 'h'}{j}",
+                "br_brquads", 5 if j % 3 else 7, j % 2, 1.5, 100, 100, 2000.0 if j % 2 else 1000.0,
+                2500.0, 1, 0, j % 2, 2, 0, int(g == "W"), int(g == "L"), placement, 50,
+            ))
+    return spark.createDataFrame(rows, (
+        "is_core boolean, player_id string, date_key string, game_id string, "
+        "game_mode_sub string, kills long, deaths long, kdRatio double, damageDone long, "
+        "damageTaken long, score double, distanceTraveled double, headshots long, "
+        "objectiveBrCacheOpen long, objectiveReviver long, objectiveBrDownAll long, "
+        "objectiveDestroyedVehicleAll long, gulagKills long, gulagDeaths long, "
+        "teamPlacement long, numberOfTeams long"
+    ))
+
+
 class TestLeaderboards:
     def test_core_only_and_order(self, engine):
-        boards = engine.leaderboards(k=5)
+        boards = engine.leaderboards()
         kills = [r.asDict() for r in boards["mostkills"].collect()]
         players = {r["player_id"] for r in kills}
         assert "carol" not in players  # non-core excluded
@@ -190,14 +272,59 @@ class TestLeaderboards:
         )
         assert lp[("alice",)]["value"] == 1  # g003
 
-    def test_api_boards_equal_documents(self, engine, tmp_path):
+    @staticmethod
+    def _same_as_general(stats):
+        from collections import Counter
+
+        from cod_stats_spark.engine import leaderboards as lb
+
+        cols = ["board", "rank", *lb.BY_GAME_COLUMNS, "until_date_key", "lv", "dv", "sv"]
+        got = [tuple(r) for r in lb.boards(stats).select(cols).collect()]
+        want = [tuple(r) for r in boards_general(stats).select(cols).collect()]
+        assert Counter(got) == Counter(want)
+        return got
+
+    def test_one_window_matches_general_on_fixture(self, engine):
+        """The one ranked table equals the two windows it replaced, row
+        for row and rank for rank."""
+        assert self._same_as_general(engine.stats_wz())
+
+    def test_one_window_matches_general_on_ties(self, spark):
+        """The same on a frame where most boards tie past the cut: equal
+        by-game values across players and dates, equal streak lengths,
+        equal win counts. Every board keeps exactly LEADERBOARD_K rows
+        where it has that many, and non-core rows never rank."""
+        from collections import Counter
+
+        from cod_stats_spark.engine import leaderboards as lb
+
+        rows = self._same_as_general(tied_stats(spark))
+        sizes = Counter(r[0] for r in rows)
+        assert all(sizes[b] == lb.LEADERBOARD_K for b in lb.BY_GAME_METRICS)
+        assert sizes["consecutive_gulag_kills"] == 5  # a 2+2, b 2, c 2+2
+        assert sizes["most_wins"] == 4
+        assert "e" not in {r[5] for r in rows}
+
+    def test_api_board_is_a_top_k_over_the_cached_table(self, engine):
+        """Every API board reads the persisted board table through a
+        per-partition top-k: TakeOrderedAndProject over InMemoryTableScan
+        and no Exchange above the cache (no re-ranking, no range sort)."""
+        frames = [*engine.leaderboards().values(), engine.gulag_streaks(True),
+                  engine.gulag_streaks(False), engine.most_wins(), engine.most_last_places()]
+        for df in frames:
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            top = plan.split("InMemoryRelation")[0]  # the plan above the cached table
+            assert "TakeOrderedAndProject" in top and "InMemoryTableScan" in top, plan
+            assert "Exchange" not in top, plan
+
+    def test_api_boards_equal_documents(self, engine, reports):
         """Every API board has the rows, values, value types and order of
         its board in the report documents."""
         import json as js
 
-        engine.write_reports(str(tmp_path))
-        bygame = js.loads((tmp_path / "leaderboard_bygame.json").read_text())
-        lifetime = js.loads((tmp_path / "leaderboard_lifetime.json").read_text())
+        out, _ = reports
+        bygame = js.loads((out / "leaderboard_bygame.json").read_text())
+        lifetime = js.loads((out / "leaderboard_lifetime.json").read_text())
         api = {b: df.collect() for b, df in engine.leaderboards().items()}
         assert set(api) == set(bygame)
         pairs = [(api[b], bygame[b]) for b in bygame] + [
@@ -261,11 +388,11 @@ class TestTimeseries:
 
 
 class TestReports:
-    def test_write_reports(self, engine, tmp_path):
+    def test_write_reports(self, reports):
         import json as js
 
-        files = engine.write_reports(str(tmp_path))
-        names = {f.split(str(tmp_path) + "/")[1] for f in files}
+        out, files = reports
+        names = {f.split(str(out) + "/")[1] for f in files}
         assert {
             "leaderboard_bygame.json",
             "leaderboard_lifetime.json",
@@ -275,16 +402,16 @@ class TestReports:
             "seasons.json",
             "meta.json",
         } <= names
-        doc = js.loads((tmp_path / "leaderboard_bygame.json").read_text())
+        doc = js.loads((out / "leaderboard_bygame.json").read_text())
         assert set(doc) == {
             "mostkills", "mostdeaths", "bestkd", "mostdamage", "mostdamagetaken",
             "highestscore", "longestdistance", "mostheadshots", "mostcaches",
             "mostrevives", "mostdowns", "mostvehicles",
         }
-        tsdoc = js.loads((tmp_path / "players/alice_lifetime_time_wz.json").read_text())
+        tsdoc = js.loads((out / "players/alice_lifetime_time_wz.json").read_text())
         assert tsdoc and "stats" in tsdoc[0] and "cumalative" in tsdoc[0]["stats"]
         # the returned list is exactly the files on disk, each listed once
-        on_disk = {str(p) for p in tmp_path.rglob("*") if p.is_file()}
+        on_disk = {str(p) for p in out.rglob("*") if p.is_file()}
         assert len(files) == len(set(files))
         assert set(files) == on_disk
 
@@ -337,11 +464,11 @@ class TestReports:
         players = engine.players.select("player_id").distinct().count()
         assert tasks == [min(players, spark.sparkContext.defaultParallelism)]
 
-    def test_distance_board_km_formatting(self, engine, tmp_path):
+    def test_distance_board_km_formatting(self, reports):
         import json as js
 
-        engine.write_reports(str(tmp_path))
-        doc = js.loads((tmp_path / "leaderboard_bygame.json").read_text())
+        out, _ = reports
+        doc = js.loads((out / "leaderboard_bygame.json").read_text())
         # reference generate_lookup_data.sh:215:
         # cast((distanceTraveled/1000) as int) || ' km'  (fixture: 2500 m)
         values = {r["value"] for r in doc["longestdistance"]}
@@ -380,19 +507,17 @@ class TestDims:
 
 
 class TestReportGoldens:
-    def test_reports_match_checked_in_goldens(self, engine, tmp_path):
+    def test_reports_match_checked_in_goldens(self, reports):
         """Byte-parity serving contract: every emitted document must be
         byte-identical to tests/goldens/reports/ (the reference serves
         exact JSON — generate_lookup_data.sh:93-512). Regenerate
         intentionally with tools/regen_goldens.py after a semantic
         change."""
         import os
-        from datetime import datetime, timezone
 
         golden_root = os.path.join(os.path.dirname(__file__), "goldens", "reports")
         assert os.path.isdir(golden_root), "run tools/regen_goldens.py first"
-        out = tmp_path / "reports"
-        engine.write_reports(str(out), now=datetime(2026, 1, 1, tzinfo=timezone.utc))
+        out, _ = reports
         golden_files = {
             os.path.relpath(os.path.join(d, f), golden_root)
             for d, _, fs in os.walk(golden_root)
@@ -477,20 +602,20 @@ class TestSqlApi:
 
 
 class TestSeasonalReports:
-    def test_per_season_files(self, engine, tmp_path):
+    def test_per_season_files(self, reports):
         import json as js
 
-        files = engine.write_reports(str(tmp_path))
+        out, _ = reports
         # per-(player, season) series files exist for season05 (fixture epoch)
-        t = tmp_path / "players/alice_season05_time_wz.json"
-        g = tmp_path / "players/alice_season05_game_wz.json"
+        t = out / "players/alice_season05_time_wz.json"
+        g = out / "players/alice_season05_game_wz.json"
         assert t.exists() and g.exists()
         tdoc = js.loads(t.read_text())
-        ldoc = js.loads((tmp_path / "players/alice_lifetime_time_wz.json").read_text())
+        ldoc = js.loads((out / "players/alice_lifetime_time_wz.json").read_text())
         assert tdoc and ldoc
         assert "smoothed_10" in js.loads(g.read_text())[0]["stats"]
         # player season-stats rollup file: season rows ordered by sort_order
-        ps = js.loads((tmp_path / "players/alice_player_stats.json").read_text())
+        ps = js.loads((out / "players/alice_player_stats.json").read_text())
         assert ps[0]["season_id"] == "lifetime"
         assert any(r["season_id"] == "season05" for r in ps)
 

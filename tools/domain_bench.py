@@ -118,7 +118,7 @@ def main() -> None:
     run("daily", eng.daily)
     run("season_rollup", eng.season_rollup)
     run("placement_pivot", eng.placement_pivot)
-    run("leaderboard_mostkills", lambda: eng.leaderboards(k=10)["mostkills"])
+    run("leaderboard_mostkills", lambda: eng.leaderboards()["mostkills"])
     run("gulag_streaks", eng.gulag_streaks)
     run("team_breakdowns", eng.team_breakdowns)
     run("daily_timeseries", eng.daily_timeseries)
