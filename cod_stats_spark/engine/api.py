@@ -13,6 +13,9 @@ Materialization: the silver fact table is persisted on first access
 (the reference's drop-and-rebuild materialized table, SURVEY.md §4) —
 every downstream view reuses it instead of re-parsing JSON. So is the
 ranked board table, which the board documents and every API board read.
+The SQL views are built once per engine. ``write_reports`` shapes and
+writes every document on the driver, so the pipeline runs no Python code
+on the workers.
 """
 
 from __future__ import annotations
@@ -47,8 +50,8 @@ class Engine:
         # date_key derivation (from_unixtime) and the oracle dialect both
         # assume UTC + non-ANSI; normalize regardless of who built the
         # session. No ship_package: the engine's plans are built-in
-        # Column expressions and its one worker-side function (the
-        # per-player writer in _write_player_docs) is pickled by value.
+        # Column expressions, and every document is shaped and written
+        # on the driver, so no Python code runs on the workers.
         prep_session(spark)
         self.spark = spark
         self.bronze = bronze
@@ -56,6 +59,7 @@ class Engine:
         self._silver: DataFrame | None = None
         self._stats: DataFrame | None = None
         self._boards: DataFrame | None = None
+        self._views: dict[str, DataFrame] | None = None
 
     @classmethod
     def from_paths(cls, spark: SparkSession, matches_path: str, players_json: str) -> "Engine":
@@ -188,10 +192,17 @@ class Engine:
     def register_views(self) -> list[str]:
         """Expose the whole view stack to spark.sql() — the reference
         user's SQL workflow keeps working (views are code, not state:
-        recreated per session, SURVEY §1.3)."""
-        for view, method in self.VIEW_BUILDERS.items():
-            getattr(self, method)().createOrReplaceTempView(view)
-        return list(self.VIEW_BUILDERS)
+        recreated per session, SURVEY §1.3). The view frames are built on
+        the first call only; every call registers them again, because
+        temp views are session-global and another Engine may have
+        replaced them."""
+        if self._views is None:
+            self._views = {
+                view: getattr(self, method)() for view, method in self.VIEW_BUILDERS.items()
+            }
+        for view, df in self._views.items():
+            df.createOrReplaceTempView(view)
+        return list(self._views)
 
     def sql(self, query: str) -> DataFrame:
         self.register_views()
@@ -202,18 +213,18 @@ class Engine:
     def write_reports(self, out_dir: str, now=None) -> list[str]:
         """Emit the static-site JSON documents (reference stage 3).
 
-        Top-k documents (boards, recents, dims) are tiny by
-        construction and collected to the driver. Per-player documents
-        are written DISTRIBUTED: one grouped pass folds each player's
-        four document families to one row and one mapPartitions writes
-        that player's whole file set, so the driver never holds the
-        timeseries/session rows (``out_dir`` must be driver+executor-
-        visible storage — true in local mode and for shared
-        filesystems/object stores). Returns every written path once.
+        Every document is built and written on the driver, as the
+        reference bakes its site on one machine: the top-k documents
+        (boards, recents, dims) from small collects, and the per-player
+        documents from one collect of one row per player, which already
+        holds that player's every timeseries and session row. That collect
+        holds the whole per-player output in driver memory at once, so the
+        driver's heap grows with players x days x seasons, the size of the
+        report set. Returns every written path once.
 
-        Raises ValueError (surfaced through Spark's task failure) when a
-        player id is empty, ``.``/``..`` or holds a path separator: ids
-        come from config names and name the player files.
+        Raises ValueError when a player id is empty, ``.``/``..`` or
+        holds a path separator: ids come from config names and name the
+        player files.
         """
         from concurrent.futures import ThreadPoolExecutor
 
@@ -231,43 +242,39 @@ class Engine:
         # sequential because driver code calls them sequentially).
         # Results are byte-identical: each payload is built from its own
         # deterministic collect, and the files are written in a fixed order.
-        # Each entry yields {file name: payload}; one collect of the board
-        # table yields both leaderboard documents.
+        # Each entry yields (relative path, payload) pairs; one collect of
+        # the board table yields both leaderboard documents. The player
+        # entry goes first: its pairs are shaped and written here while
+        # the other entries' collects run.
         docs = [
-            lambda: rep.leaderboard_docs(self.boards()),
-            lambda: {"team_leaderboards.json": rep.team_leaderboards_doc(self.team_breakdowns())},
-            lambda: {"recent_matches.json": rep.recent_matches_doc(self.recent_matches())},
-            lambda: {"recent_sessions.json": rep.sessions_doc(self.recent_sessions())},
-            lambda: {"seasons.json": rep.seasons_doc(), "meta.json": rep.meta_doc(now)},
+            self._player_docs,
+            lambda: rep.leaderboard_docs(self.boards()).items(),
+            lambda: [("team_leaderboards.json", rep.team_leaderboards_doc(self.team_breakdowns()))],
+            lambda: [("recent_matches.json", rep.recent_matches_doc(self.recent_matches()))],
+            lambda: [("recent_sessions.json", rep.sessions_doc(self.recent_sessions()))],
+            lambda: [("seasons.json", rep.seasons_doc()), ("meta.json", rep.meta_doc(now))],
         ]
         written = []
         with ThreadPoolExecutor(max_workers=4) as pool:
-            player_docs = pool.submit(self._write_player_docs, out_dir)
-            futures = [pool.submit(fn) for fn in docs]
-            for fut in futures:
-                for rel, payload in fut.result().items():
+            for fut in [pool.submit(fn) for fn in docs]:
+                for rel, payload in fut.result():
                     path = os.path.join(out_dir, rel)
                     rep.write_json(path, payload)
                     written.append(path)
-            written += player_docs.result()
         return written
 
     # per-player document fan-out ------------------------------------
 
-    def _write_player_docs(self, out_dir: str) -> list[str]:
-        """Every player's documents from one grouped pass and one action:
-        ``{p}_player_stats``, ``sessions_{p}`` and, for every SEASONS id,
-        the time and game series, ``[]`` where a season has no rows (the
-        reference iterates ALL of vw_seasons, generate_lookup_data.sh:
-        892-932). Each family is projected to (player_id, struct(k, v)),
-        unioned with the players dim and collected per player, sorted by
-        k; collect_list skips the union's nulls, so a player with no games
-        gets four empty arrays. The writer runs one task per core.
-        Returns the written paths."""
+    def _player_docs(self):
+        """Every player's documents from one grouped pass and one collect.
+        Each family is projected to (player_id, struct(k, v)), unioned
+        with the players dim and collected per player, sorted by k;
+        collect_list skips the union's nulls, so a player with no games
+        gets four empty arrays. Returns a generator of the
+        ``rep.player_docs`` pairs over the collected rows."""
         from pyspark.sql import functions as F
 
-        from cod_stats_spark.engine.dims import SEASONS
-        from cod_stats_spark.engine.timeseries import DAILY_SERIES, GAME_SERIES, TS_METRICS
+        from cod_stats_spark.engine.timeseries import DAILY_SERIES, GAME_SERIES
 
         families = {
             "time": (self.seasonal_daily_timeseries(), ["season_id", *DAILY_SERIES[0]]),
@@ -281,56 +288,11 @@ class Engine:
             union = union.unionByName(
                 df.select("player_id", kv.alias(name)), allowMissingColumns=True
             )
-        # an explicit partition count: AQE would coalesce the small
-        # shuffle to one partition, i.e. one writer task for all players;
-        # the aggregate reuses this partitioning, so it is still one shuffle
-        parts = self.spark.sparkContext.defaultParallelism
-        grouped = union.repartition(parts, "player_id").groupBy("player_id").agg(*[
+        rows = union.groupBy("player_id").agg(*[
             F.transform(F.array_sort(F.collect_list(name)), lambda x: x["v"]).alias(name)
             for name in families
-        ])
-
-        # plain data only: the writer is pickled by value
-        season_ids = [s[0] for s in SEASONS]
-        series = {"time": DAILY_SERIES[1], "game": GAME_SERIES[1]}
-        metrics = [tuple(m) for m in TS_METRICS]
-
-        def write_part(it):
-            import json
-            import os
-
-            players_dir = os.path.join(out_dir, "players")
-
-            def dump(name, payload):
-                path = os.path.join(players_dir, name)
-                with open(path, "w") as f:
-                    json.dump(payload, f, separators=(",", ":"))
-                return path
-
-            for row in it:
-                d = row.asDict(recursive=True)
-                p = d["player_id"]
-                if not p or p in (".", "..") or "/" in p or "\\" in p:
-                    raise ValueError(f"player id {p!r} is not a safe file name")
-                os.makedirs(players_dir, exist_ok=True)
-                yield dump(f"{p}_player_stats.json", d["stats"])
-                yield dump(f"sessions_{p}.json", d["sessions"])
-                for kind, (k1, k2) in series.items():
-                    by_season: dict[str, list] = {}
-                    for r in d[kind]:
-                        by_season.setdefault(r["season_id"], []).append({
-                            "date": r["date_key"],
-                            "stats": {
-                                "raw": {m: r[m] for m, _ in metrics},
-                                f"smoothed_{k1}": {m: r[f"{m}_{a}_s{k1}"] for m, a in metrics},
-                                f"smoothed_{k2}": {m: r[f"{m}_{a}_s{k2}"] for m, a in metrics},
-                                "cumalative": {m: r[f"{m}_{a}_cume"] for m, a in metrics},
-                            },
-                        })
-                    for s in season_ids:
-                        yield dump(f"{p}_{s}_{kind}_wz.json", by_season.get(s, []))
-
-        return grouped.rdd.mapPartitions(write_part).collect()
+        ]).collect()
+        return (pair for row in rows for pair in rep.player_docs(row))
 
 
 def write_silver(

@@ -1,26 +1,29 @@
 """JSON report documents (reference frontend/generate_lookup_data.sh —
 the S9/S10 sink family).
 
-The top-k documents here (boards, recents, dims) are SMALL results —
-the heavy work happened in distributed aggregations; they are collected
-to the driver and written as single JSON files, mirroring the
-reference's static-file serving layer. Both leaderboard documents come
-from one collect of the one board table (``leaderboards.boards``). The
-per-player documents are not collected: ``Engine.write_reports`` writes
-them from the executors, one grouped pass for every player's whole file
-set.
+Every document shape lives here, and every document is built and
+written on the driver, mirroring the reference, which bakes its whole
+static site on one machine before syncing it (run_and_deploy.sh:21-41).
+The top-k documents (boards, recents, dims) are small results of
+distributed aggregations. Both leaderboard documents come from one
+collect of the one board table (``leaderboards.boards``). The
+per-player documents come from one collect of one row per player
+(``Engine.write_reports``), which ``player_docs`` fans out to that
+player's whole file set.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from collections.abc import Iterator
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 
 from cod_stats_spark.engine.dims import SEASONS
 from cod_stats_spark.engine.leaderboards import BOARDS, BY_GAME_METRICS
+from cod_stats_spark.engine.timeseries import DAILY_SERIES, GAME_SERIES, TS_METRICS
 
 
 def _rows(df: DataFrame) -> list[dict]:
@@ -66,7 +69,41 @@ def recent_matches_doc(recent: DataFrame) -> list:
 
 
 def sessions_doc(session_stats: DataFrame) -> list:
-    return _rows(session_stats)
+    """The latest session of every player, in player_id order."""
+    return sorted(_rows(session_stats), key=lambda r: r["player_id"])
+
+
+def player_docs(row) -> Iterator[tuple[str, object]]:
+    """One grouped player row (player_id plus the ``time``, ``game``,
+    ``stats`` and ``sessions`` arrays, each in document order) → that
+    player's 38 (relative path, payload) pairs: ``{p}_player_stats``,
+    ``sessions_{p}`` and, for every SEASONS id, the time and game series,
+    ``[]`` where a season has no rows (the reference iterates ALL of
+    vw_seasons, generate_lookup_data.sh:892-932).
+
+    Raises ValueError when the player id is empty, ``.``/``..`` or holds
+    a path separator: ids come from config names and name the files.
+    """
+    d = row.asDict(recursive=True)
+    p = d["player_id"]
+    if not p or p in (".", "..") or "/" in p or "\\" in p:
+        raise ValueError(f"player id {p!r} is not a safe file name")
+    yield f"players/{p}_player_stats.json", d["stats"]
+    yield f"players/sessions_{p}.json", d["sessions"]
+    for kind, (k1, k2) in (("time", DAILY_SERIES[1]), ("game", GAME_SERIES[1])):
+        by_season: dict[str, list] = {}
+        for r in d[kind]:
+            by_season.setdefault(r["season_id"], []).append({
+                "date": r["date_key"],
+                "stats": {
+                    "raw": {m: r[m] for m, _ in TS_METRICS},
+                    f"smoothed_{k1}": {m: r[f"{m}_{a}_s{k1}"] for m, a in TS_METRICS},
+                    f"smoothed_{k2}": {m: r[f"{m}_{a}_s{k2}"] for m, a in TS_METRICS},
+                    "cumalative": {m: r[f"{m}_{a}_cume"] for m, a in TS_METRICS},
+                },
+            })
+        for s, *_ in SEASONS:
+            yield f"players/{p}_{s}_{kind}_wz.json", by_season.get(s, [])
 
 
 def seasons_doc() -> list[dict]:

@@ -433,7 +433,7 @@ class TestReports:
         ]))
         out = tmp_path / "site" / "data"
         eng = Engine.from_paths(spark, f"{mdir}/*.json", str(pj))
-        with pytest.raises(Exception, match=r"ValueError: player id '\.\./\.\./escaped'"):
+        with pytest.raises(ValueError, match=r"player id '\.\./\.\./escaped'"):
             eng.write_reports(str(out))
         outside = [
             p for p in tmp_path.rglob("*")
@@ -441,28 +441,33 @@ class TestReports:
         ]
         assert outside == []
 
-    def test_player_writer_runs_one_task_per_core(self, spark, engine, tmp_path):
-        """The per-player writer stage (the one collect in api.py) runs
-        min(players, defaultParallelism) tasks, not the single task AQE
-        makes of a small shuffle it may coalesce."""
-        import re
+    def test_recent_sessions_in_player_order(self, spark, tmp_path):
+        """``recent_sessions.json`` lists players in player_id order even
+        when the session window's shuffle is not coalesced to one
+        partition (with 4 partitions, 8 players come back in hash order)."""
+        import json as js
 
-        from cod_stats_spark.engine import api
+        from cod_stats_spark.engine import Engine
+        from tests.conftest import T0, _match
 
-        tracker = spark.sparkContext.statusTracker()
-        before = set(tracker.getJobIdsForGroup())
-        engine.write_reports(str(tmp_path))
-        stages = {
-            s for j in set(tracker.getJobIdsForGroup()) - before
-            for s in tracker.getJobInfo(j).stageIds
-        }
-        writer = re.compile(rf"collect at {re.escape(api.__file__)}:\d+$")
-        tasks = [
-            info.numTasks for info in map(tracker.getStageInfo, stages)
-            if info and writer.match(info.name)
-        ]
-        players = engine.players.select("player_id").distinct().count()
-        assert tasks == [min(players, spark.sparkContext.defaultParallelism)]
+        mdir = tmp_path / "matches"
+        mdir.mkdir()
+        names = [f"p{i:02d}" for i in range(8)]
+        for i, name in enumerate(names):
+            uno = f"uno-{name}"
+            (mdir / f"match_g{i}_{uno}.json").write_text(js.dumps(_match(f"g{i}", uno, T0 + i)))
+        pj = tmp_path / "players.json"
+        pj.write_text(js.dumps([{"name": n, "accounts": [{"unoId": f"uno-{n}"}]} for n in names]))
+        out = tmp_path / "site"
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        before = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            Engine.from_paths(spark, f"{mdir}/*.json", str(pj)).write_reports(str(out))
+        finally:
+            spark.conf.set(key, before)
+        doc = js.loads((out / "recent_sessions.json").read_text())
+        assert [r["player_id"] for r in doc] == names
 
     def test_distance_board_km_formatting(self, reports):
         import json as js
@@ -535,10 +540,10 @@ class TestReportGoldens:
             assert got == want, f"byte drift vs golden in {rel}"
 
     def test_goldens_without_shipped_package(self, fixture_dirs, tmp_path):
-        """write_reports needs no package on the Python workers: in a
-        fresh application whose workers cannot import cod_stats_spark,
-        with ship_package made to fail, the documents still match the
-        goldens byte for byte."""
+        """write_reports runs no Python code on the workers, so it needs no
+        package there either: in a fresh application whose worker Python
+        is a program that exits non-zero at once, with ship_package made
+        to fail, the documents still match the goldens byte for byte."""
         import os
         import subprocess
         import sys
@@ -547,8 +552,11 @@ class TestReportGoldens:
         golden_root = os.path.join(repo, "tests", "goldens", "reports")
         mdir, pj = fixture_dirs
         out = tmp_path / "reports"
+        no_python = tmp_path / "no-python"
+        no_python.write_text("#!/bin/sh\nexit 1\n")
+        no_python.chmod(0o755)
         script = f"""
-import importlib.util, sys
+import sys
 from datetime import datetime, timezone
 sys.path.insert(0, {repo!r})
 from cod_stats_spark import session
@@ -558,18 +566,18 @@ def refuse(spark):
 
 session.ship_package = refuse
 spark = session.get_spark("no-ship", cpus=2)
-probe = spark.sparkContext.parallelize([0], 1)
-assert probe.map(lambda _: importlib.util.find_spec("cod_stats_spark")).collect() == [None]
+try:
+    spark.sparkContext.parallelize([0], 1).map(lambda x: x).collect()
+except Exception:
+    pass
+else:
+    raise AssertionError("a Python task ran on a worker")
 from cod_stats_spark.engine import Engine
 eng = Engine.from_paths(spark, {mdir + "/*.json"!r}, {pj!r})
 eng.write_reports({str(out)!r}, now=datetime(2026, 1, 1, tzinfo=timezone.utc))
 spark.stop()
 """
-        # workers inherit PYTHONPATH: keep the repo off it (cwd is tmp_path)
-        pythonpath = os.environ.get("PYTHONPATH", "").split(os.pathsep)
-        env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=os.pathsep.join(
-            p for p in pythonpath if p and os.path.abspath(p) != repo
-        ))
+        env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", PYSPARK_PYTHON=str(no_python))
         proc = subprocess.run(
             [sys.executable, "-c", script], cwd=tmp_path, env=env,
             capture_output=True, text=True, timeout=600,
@@ -599,6 +607,20 @@ class TestSqlApi:
             "SELECT count(*) AS n FROM player_sessions_with_stats WHERE player_id = 'bob'"
         ).first()
         assert sessions["n"] >= 2
+
+    def test_views_built_once_per_engine(self, engine, monkeypatch):
+        """Once sql() has built the view frames, another sql() only
+        registers them again, calling no view builder."""
+        query = "SELECT count(*) AS n FROM player_sessions_with_stats"
+        first = engine.sql(query).collect()
+        calls = []
+        for method in set(engine.VIEW_BUILDERS.values()):
+            build = getattr(engine, method)
+            monkeypatch.setattr(
+                engine, method, lambda build=build, method=method: calls.append(method) or build()
+            )
+        assert engine.sql(query).collect() == first
+        assert calls == []
 
 
 class TestSeasonalReports:
